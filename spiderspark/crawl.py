@@ -28,7 +28,8 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
   Zipf skew); updates are bucket-partitioned delta directories; compaction
   is a distributed groupBy(bucket) merge. Bloom (default) or cuckoo
   (deletion support) tiers behind the same rows. Nothing sketch-shaped ever
-  lives on the driver or in a broadcast.
+  lives on the driver or in a broadcast. Only ``seen_tier="sketch"`` keeps
+  a sketch; the default mirror tier filters through its exact mirror.
 - Iterative-loop hygiene: each round's state is re-materialized through
   ``materialize_keyed`` (plans stay shallow; the checkpoint write is
   partition-local — no network) or, with ``durable_state=True``, through
@@ -98,9 +99,15 @@ class CrawlConfig:
     # Sandbox default sized for local[32]; cluster: O(total cores), fixed
     # for the lifetime of a crawl.
     state_buckets: int = 32
+    # the sketch knobs (bloom_capacity_per_bucket, bloom_fpp, use_bloom,
+    # sketch_kind) apply only under seen_tier="sketch": the mirror tier
+    # builds no sketch (it only keeps a committed one when resuming a
+    # snapshot that has no mirror, unless use_bloom=False — see resume)
     bloom_capacity_per_bucket: int = 1 << 16
     bloom_fpp: float = 0.01
     skew_threshold: int = 50_000
+    # sketch tier only: False runs it exact-only (no sketch; the classic
+    # anti-join + two-phase window)
     use_bloom: bool = True
     # how per-round seen filtering runs over the stored frontier segments:
     # - "mirror" (default; round-5 measured winner): the seen set keeps an
@@ -113,11 +120,13 @@ class CrawlConfig:
     # - "sketch": the bloom/cuckoo membership + guarded-prefix pre-selection
     #   (frontier.membership_prefix_topk) — reads ~1.2 bits per seen key
     #   instead of the mirror's 16 key bytes: the right tier when the seen
-    #   set dwarfs what per-task sequential reads should pay per round.
+    #   set dwarfs what per-task sequential reads should pay per round. The
+    #   only tier that builds a sketch.
     # Both tiers produce byte-identical schedules (test_fused_schedule).
     seen_tier: str = "mirror"
-    # approximate-tier filter family: "bloom" (default) or "cuckoo" (adds
-    # deletion for re-crawl-after-TTL deployments; see sketch.CuckooFilter)
+    # sketch tier only — filter family: "bloom" (default) or "cuckoo" (adds
+    # deletion for re-crawl-after-TTL deployments; see sketch.CuckooFilter).
+    # The mirror tier expires TTL'd urls (forget_urls) under either value.
     sketch_kind: str = "bloom"
     max_depth: int = 64
     # reference parity: failed lookups are re-queued (SURVEY.md §0.3.5);
@@ -153,6 +162,8 @@ class CrawlState:
     frontier: SegmentedTable
     seen: SegmentedTable
     host_state: DataFrame
+    # the sketch tier's: None with use_bloom=False and under the mirror
+    # tier, unless that tier resumed a snapshot with no mirror (see resume)
     sketch: SketchRef | None
     batch_id: int
     workdir: str
@@ -206,6 +217,19 @@ def _keyed_mat(config: CrawlConfig, workdir: str):
     return mat
 
 
+def _wants_sketch(config: CrawlConfig) -> bool:
+    """Only the sketch tier reads the URL-seen sketch (select_round's mirror
+    branch never does), so only it builds one."""
+    return config.seen_tier == "sketch" and config.use_bloom
+
+
+def _new_sketch(config: CrawlConfig) -> SketchRef:
+    return SketchRef.create(
+        config.state_buckets, config.bloom_capacity_per_bucket, config.bloom_fpp,
+        routing=FRONTIER_KEY, kind=config.sketch_kind,
+    )
+
+
 def _frontier_cols(df: DataFrame) -> DataFrame:
     return df.select(*[f.name for f in FRONTIER.fields])
 
@@ -224,8 +248,12 @@ def init_state(
     )
     # robots-disallowed URLs are dropped at INSERTION time — they can never
     # be scheduled (robots is static per crawl), so keeping them would grow
-    # frontier state unboundedly with re-gated dead rows
-    rows = insertion_gate(seeds_to_frontier(spark, seeds, batch_id=0), host_state)
+    # frontier state unboundedly with re-gated dead rows. Pinned once: the
+    # salt table and the first frontier segment both read these rows, and
+    # re-deriving them would canonicalise every seed twice
+    rows = _materialize(
+        insertion_gate(seeds_to_frontier(spark, seeds, batch_id=0), host_state)
+    )
     # static salt table from the seed host distribution (any size estimate
     # is schedule-invariant; late-heavy hosts cost balance only)
     salts = _materialize(
@@ -248,14 +276,7 @@ def init_state(
         sort=frontier0.sort_cols,
     )
     frontier = frontier0.append(seg0)
-    sketch = (
-        SketchRef.create(
-            n, config.bloom_capacity_per_bucket, config.bloom_fpp,
-            routing=FRONTIER_KEY, kind=config.sketch_kind,
-        )
-        if config.use_bloom
-        else None
-    )
+    sketch = _new_sketch(config) if _wants_sketch(config) else None
     caps = host_state.agg(F.max("capacity").alias("m")).collect()
     k_cap = int(
         max(config.policy.default_budget, (caps[0]["m"] or 0) if caps else 0)
@@ -713,7 +734,8 @@ def mark_seen(
     into the scheduler-layout mirror, folded into the sketch delta (bloom
     AND cuckoo — insertion is additive), and matching frontier rows are
     PRUNED through the same co-partitioned anti-joins as schedule removal,
-    so state never carries rows that can no longer schedule.
+    so state never carries rows that can no longer schedule. Only a
+    sketch-tier state carries a sketch; a mirror-tier state writes none.
 
     Cost/scale: O(keys) exchange to route the batch; stored segments are
     probed/rewritten with zero exchange and zero sort on their side."""
@@ -819,20 +841,24 @@ def forget_urls(
 ) -> CrawlState:
     """TTL expiry, coherent across EVERY seen representation the state
     carries: the exact url_hash table, the scheduler-layout mirror
-    (``seen_tier="mirror"``, the default), and the cuckoo sketch. After
-    this, re-injecting the urls into the frontier (caller's move — fresh
-    priority/depth via ``seeds_to_frontier`` + ``frontier.append``, see
-    tests/test_cuckoo_delete.py) makes the same crawl loop schedule them
-    again. Deleting from only ONE representation is a silent no-op re-crawl
-    under the others — the mirror's anti-join or the sketch's membership
-    pass would still suppress the url — which is why this is one call.
+    (``seen_tier="mirror"``, the default), and the sketch tier's cuckoo
+    sketch. After this, re-injecting the urls into the frontier (caller's
+    move — fresh priority/depth via ``seeds_to_frontier`` +
+    ``frontier.append``, see tests/test_cuckoo_delete.py) makes the same
+    crawl loop schedule them again. Deleting from only ONE representation
+    leaves the others stale: the mirror's anti-join would still suppress
+    the url (a silent no-op re-crawl), and a stale sketch entry keeps its
+    filter slot and sends the url through the exact anti-join as a maybe
+    every round — which is why this is one call.
 
     ``keys_df``: url_hash, url_norm, host (the shape a schedule row
     carries). Only urls KNOWN to have entered the seen set may be passed
     (the cuckoo deletion precondition — sketch.CuckooFilter.delete). A
-    bloom sketch cannot unset bits, so a state carrying one refuses
-    loudly: TTL deployments configure ``CrawlConfig(sketch_kind="cuckoo")``
-    (or ``use_bloom=False`` with the mirror tier).
+    bloom sketch cannot unset bits, so a sketch-tier state carrying one
+    refuses loudly: sketch-tier TTL deployments configure
+    ``CrawlConfig(sketch_kind="cuckoo")`` (or ``use_bloom=False``). The
+    mirror tier keeps no sketch, so it expires urls under either
+    ``sketch_kind``.
 
     Cost/scale: O(keys) exchange to route the key batch; every stored
     segment is rewritten through a co-partitioned LEFT-ANTI join — zero
@@ -846,7 +872,8 @@ def forget_urls(
         raise ValueError(
             "forget_urls: the state carries a bloom sketch, which cannot "
             "unset bits — configure CrawlConfig(sketch_kind='cuckoo') for "
-            "re-crawl-after-TTL deployments (or use_bloom=False)"
+            "re-crawl-after-TTL deployments (or use_bloom=False, or the "
+            "default mirror tier, which keeps no sketch)"
         )
     mat = _keyed_mat(config, state.workdir)
     n = state.seen.n_parts
@@ -933,17 +960,21 @@ def commit_state(
     return replace(state, snapshot_id=snapshot_id)
 
 
-def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> CrawlState:
-    """§3.3 exact resume: validate lineage, point the sketch at the stored
-    bucket-partitioned rows (NO rescan of seen, NO driver rebuild), continue
-    at batch N+1."""
-    snapshot_id = store.head()
-    assert snapshot_id is not None, "nothing to resume from"
-    assert store.validate(snapshot_id, spark), "lineage validation failed"
-    m = store.manifest(snapshot_id)
+def _resume_sketch(
+    spark: SparkSession,
+    store: SnapshotStore,
+    snapshot_id: int,
+    tables: dict,
+    config: CrawlConfig,
+    workdir: str,
+) -> SketchRef:
+    """The sketch tier's URL-seen sketch for a resumed state: the committed
+    ``seen_sketch`` rows when the snapshot has them, else a rebuild from the
+    committed ``seen_sched`` mirror (a mirror-tier snapshot keeps no
+    sketch), so switching tiers never silently drops to the exact-only
+    branch."""
     n = config.state_buckets
-    sketch = None
-    if config.use_bloom and "seen_sketch" in m["tables"]:
+    if "seen_sketch" in tables:
         path = store.table_path(snapshot_id, "seen_sketch")
         sk_df = spark.read.parquet(path)
         # pre-schema snapshots (before routing/kind rode the rows) fall back
@@ -956,31 +987,70 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
             c for c in ("routing", "kind") if c in have
         ]
         first = sk_df.select(*sel).head(1)
-        if first:
-            stored_nb = int(first[0]["n_buckets"])
-            # bucket routing is pmod(hash(routing cols), n_buckets): resuming
-            # under a different bucket count would read the WRONG bits —
-            # silent false negatives. Fail loudly instead. The routing column
-            # list rides the rows for the same reason.
-            assert stored_nb == n, (
-                f"snapshot sketch has n_buckets={stored_nb} but "
-                f"config.state_buckets={n}; resume with the original value"
-            )
-            sketch = SketchRef(
-                (path,),
-                stored_nb,
-                int(first[0]["n_bits"]),
-                int(first[0]["n_hashes"]),
-                tuple(first[0]["routing"].split(","))
-                if "routing" in have
-                else ("url_hash",),
-                str(first[0]["kind"]) if "kind" in have else "bloom",
-            )
-        else:
-            sketch = SketchRef.create(
-                n, config.bloom_capacity_per_bucket, config.bloom_fpp,
-                routing=FRONTIER_KEY, kind=config.sketch_kind,
-            )
+        if not first:
+            return _new_sketch(config)
+        stored_nb = int(first[0]["n_buckets"])
+        # bucket routing is pmod(hash(routing cols), n_buckets): resuming
+        # under a different bucket count would read the WRONG bits — silent
+        # false negatives. Fail loudly instead. The routing column list
+        # rides the rows for the same reason.
+        assert stored_nb == n, (
+            f"snapshot sketch has n_buckets={stored_nb} but "
+            f"config.state_buckets={n}; resume with the original value"
+        )
+        return SketchRef(
+            (path,),
+            stored_nb,
+            int(first[0]["n_bits"]),
+            int(first[0]["n_hashes"]),
+            tuple(first[0]["routing"].split(","))
+            if "routing" in have
+            else ("url_hash",),
+            str(first[0]["kind"]) if "kind" in have else "bloom",
+        )
+    if "seen_sched" not in tables:
+        raise ValueError(
+            f"resume under seen_tier={config.seen_tier!r}: snapshot "
+            f"{snapshot_id} has neither a seen_sketch nor a seen_sched table "
+            "to build the URL-seen sketch from"
+        )
+    # the mirror rows already carry the sketch routing (host_bucket, salt)
+    # plus url_hash: bucket them once and fold them in as the base delta
+    sketch = _new_sketch(config)
+    mirror = store.read(spark, snapshot_id, "seen_sched")
+    if mirror.isEmpty():  # never write a files-less delta directory
+        return sketch
+    return write_sketch_delta(
+        mirror.repartition(n, *FRONTIER_KEY),
+        os.path.join(workdir, "sketch_base_resume"),
+        sketch,
+        assume_keyed_layout=True,
+    )
+
+
+def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> CrawlState:
+    """§3.3 exact resume: validate lineage, point the sketch at the stored
+    bucket-partitioned rows (NO rescan of seen, NO driver rebuild), continue
+    at batch N+1. The sketch tier resumes a sketch (see ``_resume_sketch``);
+    the mirror tier resumes one only from a snapshot that has no mirror to
+    come back (pre-mirror, or committed under the sketch tier), where the
+    committed sketch is the only seen filter left."""
+    snapshot_id = store.head()
+    assert snapshot_id is not None, "nothing to resume from"
+    assert store.validate(snapshot_id, spark), "lineage validation failed"
+    m = store.manifest(snapshot_id)
+    n = config.state_buckets
+    workdir = tempfile.mkdtemp(prefix="spiderspark-state-")
+    mirror_lost = (
+        config.use_bloom
+        and "seen_sketch" in m["tables"]
+        and "seen_sched" not in m["tables"]
+    )
+    sketch = (
+        _resume_sketch(spark, store, snapshot_id, m["tables"], config, workdir)
+        if _wants_sketch(config) or mirror_lost
+        else None
+    )
     host_state = _materialize(store.read(spark, snapshot_id, "host_state"))
     caps = host_state.agg(F.max("capacity").alias("m")).collect()
     k_cap = int(
@@ -994,9 +1064,11 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
         )
     )
     # the scheduler-layout mirror resumes from its committed table; a
-    # pre-mirror snapshot leaves it None and select_round falls back to the
-    # sketch / classic branches (the mirror cannot be rebuilt from the seen
-    # table alone — (host_bucket, salt) needs the host, which SEEN drops)
+    # snapshot without one (pre-mirror, or committed under the sketch tier)
+    # leaves it None and select_round falls back to the resumed sketch's
+    # fused branch, or to the exact-only branch when there is no sketch
+    # (the mirror cannot be rebuilt from the seen table alone —
+    # (host_bucket, salt) needs the host, which SEEN drops)
     seen_sched = None
     if config.seen_tier == "mirror" and "seen_sched" in m["tables"]:
         seen_sched = SegmentedTable.from_df(
@@ -1014,7 +1086,7 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
         host_state=host_state,
         sketch=sketch,
         batch_id=int(m["batch_id"]),
-        workdir=tempfile.mkdtemp(prefix="spiderspark-state-"),
+        workdir=workdir,
         k_cap=k_cap,
         salts=salts,
         snapshot_id=snapshot_id,

@@ -142,29 +142,6 @@ def per_host_topk_final(
     )
 
 
-def per_host_topk_select(
-    candidates: DataFrame, k_col: str = "host_budget", k_cap: int | None = None
-) -> DataFrame:
-    """per_host_topk with payload pruning: the two window phases rank a THIN
-    projection (grouping keys + order columns + budget — no payload
-    columns), then the winning url_hash set is broadcast-semi-joined back
-    onto the full rows. Selection is identical to per_host_topk (url_hash
-    is unique post-dedup).
-
-    Measured decision (interleaved A/B at 1M rows, 16 cores): with the
-    standard ~200 B frontier rows this is 20-40% SLOWER than the direct
-    window — the extra candidates pass + broadcast costs more than the
-    exchange bytes saved — so the crawl loop uses plain per_host_topk. Use
-    THIS variant when candidate rows carry fat payloads (html/text/vector
-    columns), where the pruned exchange wins by an order of magnitude."""
-    thin = candidates.select(
-        "host", "salt", k_col,
-        "priority", "depth", "discovered_batch", "url_hash",
-    )
-    keys = per_host_topk(thin, k_col, k_cap=k_cap).select("url_hash")
-    return candidates.join(F.broadcast(keys), "url_hash", "left_semi")
-
-
 def global_rank(
     df: DataFrame,
     num_partitions: int | None = None,

@@ -21,7 +21,9 @@ ROUNDS = 3
 BUDGET = 5.0
 
 
-def _spark_run(spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom"):
+def _spark_run(
+    spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom", seen_tier="mirror"
+):
     pages = spark.createDataFrame(
         gen_pages_pdf(np.arange(CORPUS), CORPUS),
         schema="url string, warc_ts timestamp, html binary, text string, lang string",
@@ -34,6 +36,7 @@ def _spark_run(spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom"):
         state_buckets=4,
         bloom_capacity_per_bucket=4096,
         sketch_kind=sketch_kind,
+        seen_tier=seen_tier,
     )
     state, schedules, logs = crawl(
         spark, seeds, pages, robots, rounds=rounds, config=config
@@ -83,18 +86,29 @@ def test_cuckoo_tier_changes_nothing(spark, oracle_result):
     be schedule-invisible exactly like bloom (false positives fall through
     to the exact tier; inserts raise rather than drop)."""
     oracle_rounds, oracle = oracle_result
-    cuckoo_rounds, cuckoo_seen, _, _, _ = _spark_run(spark, sketch_kind="cuckoo")
+    cuckoo_rounds, cuckoo_seen, state, _, _ = _spark_run(
+        spark, sketch_kind="cuckoo", seen_tier="sketch"
+    )
+    assert state.sketch.kind == "cuckoo" and len(state.sketch.paths) > 0
     assert cuckoo_rounds == oracle_rounds
     assert cuckoo_seen == sorted(oracle.seen)
 
 
 def test_bloom_tier_changes_nothing(spark, oracle_result):
-    """Bloom is an accelerator, not a semantic: with and without it the
-    schedule is identical (zero false negatives + exact residual)."""
-    oracle_rounds, _ = oracle_result
-    no_bloom_rounds, no_bloom_seen, _, _, _ = _spark_run(spark, use_bloom=False)
+    """Bloom is an accelerator, not a semantic: under the sketch tier, with
+    and without it the schedule is identical (zero false negatives + exact
+    residual)."""
+    oracle_rounds, oracle = oracle_result
+    bloom_rounds, bloom_seen, state, _, _ = _spark_run(spark, seen_tier="sketch")
+    assert state.sketch.kind == "bloom" and len(state.sketch.paths) > 0
+    assert bloom_rounds == oracle_rounds
+    assert bloom_seen == sorted(oracle.seen)
+    no_bloom_rounds, no_bloom_seen, state, _, _ = _spark_run(
+        spark, use_bloom=False, seen_tier="sketch"
+    )
+    assert state.sketch is None and state.seen_sched is None  # exact-only
     assert no_bloom_rounds == oracle_rounds
-    assert no_bloom_seen == sorted(oracle_result[1].seen)
+    assert no_bloom_seen == sorted(oracle.seen)
 
 
 def test_text_byte_identity(spark, oracle_result):

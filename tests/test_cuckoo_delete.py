@@ -124,11 +124,11 @@ def test_cuckoo_delete_then_recrawl(spark):
 
 def test_forget_urls_mirror_tier_end_to_end(spark):
     """TTL expiry under the DEFAULT seen tier: ``seen_tier='mirror'``
-    maintains the scheduler-layout seen mirror alongside the sketch, and a
-    delete that touched only the sketch would be a silent no-op (the
-    mirror's anti-join still suppresses the url forever). forget_urls must
-    expire the url from EVERY representation — exact table, mirror, cuckoo
-    sketch — so the very same mirror loop re-schedules it."""
+    maintains the scheduler-layout seen mirror alongside the exact table
+    (and no sketch), and a delete that touched only the exact table would
+    be a silent no-op (the mirror's anti-join still suppresses the url
+    forever). forget_urls must expire the url from EVERY representation so
+    the very same mirror loop re-schedules it."""
     from spiderspark.crawl import forget_urls
 
     config = CrawlConfig(
@@ -191,22 +191,44 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
 
 
 def test_forget_urls_refuses_bloom_state(spark):
-    """A state carrying a bloom sketch cannot soundly forget (bits cannot
-    be unset) — the coherent-expiry API must refuse, not silently leave a
-    stale sketch that suppresses or ghost-flags urls."""
+    """A sketch-tier state carrying a bloom sketch cannot soundly forget
+    (bits cannot be unset) — the coherent-expiry API must refuse, not
+    silently leave a stale sketch that suppresses or ghost-flags urls. The
+    default mirror tier keeps no sketch, so it forgets under the same
+    bloom ``sketch_kind``."""
     from spiderspark.crawl import forget_urls
 
-    config = CrawlConfig(policy=HostPolicy(default_budget=4.0), state_buckets=N)
+    config = CrawlConfig(
+        policy=HostPolicy(default_budget=4.0), state_buckets=N,
+        seen_tier="sketch",
+    )
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(100), 100), schema=PAGES)
     seeds = spark.createDataFrame(seeds_pdf(6, 100), schema=SEEDS)
+    pk = keyed_pages(pages, n_parts=N)
     state = init_state(spark, seeds, None, config)
-    state, s1, _ = crawl_round(spark, state, keyed_pages(pages, n_parts=N), config)
+    state, s1, _ = crawl_round(spark, state, pk, config)
     key_df = spark.createDataFrame(
         [(0, "http://h.example/", "h.example")],
         "url_hash long, url_norm string, host string",
     )
     with pytest.raises(ValueError, match="bloom"):
         forget_urls(spark, state, key_df, config)
+
+    default = CrawlConfig(policy=HostPolicy(default_budget=4.0), state_buckets=N)
+    assert (default.seen_tier, default.sketch_kind) == ("mirror", "bloom")
+    state = init_state(spark, seeds, None, default)
+    state, s1, log1 = crawl_round(spark, state, pk, default)
+    fetched = (
+        s1.join(log1.filter("status = 'fetched'").select("url_hash"), "url_hash")
+        .select("url_hash", "url_norm", "host")
+        .first()
+    )
+    seen_key = spark.createDataFrame(
+        [tuple(fetched)], "url_hash long, url_norm string, host string"
+    )
+    forgotten = forget_urls(spark, state, seen_key, default)
+    assert forgotten.sketch is None
+    assert forgotten.seen.total_rows() == state.seen.total_rows() - 1
 
 
 def test_sketch_delete_refuses_bloom(spark):

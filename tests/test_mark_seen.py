@@ -16,7 +16,11 @@ from spiderspark.crawl import (
     keyed_pages,
     mark_seen,
 )
-from spiderspark.frontier import seeds_to_frontier, with_canonical
+from spiderspark.frontier import (
+    seeds_to_frontier,
+    sketch_flag_maybe_seen,
+    with_canonical,
+)
 from spiderspark.pages import gen_pages_pdf, seeds_pdf, url_for_ids
 from spiderspark.politeness import HostPolicy
 from spiderspark.schedule import assign_salts_static
@@ -100,48 +104,61 @@ def test_mark_seen_idempotent_and_batch_preserved(spark):
         assert s1.seen_sched.total_rows() == 3
 
 
-def test_mark_seen_then_forget_restores_scheduling(spark):
-    """Round-trip with the cuckoo sketch: mark_seen suppresses, forget_urls
-    + re-injection schedules again (coherence across representations in
-    BOTH directions)."""
-    pages = spark.createDataFrame(gen_pages_pdf(np.arange(120), 120), schema=PAGES)
-    seeds = spark.createDataFrame(seeds_pdf(12, 120), schema=SEEDS)
-    config = CrawlConfig(
-        policy=HostPolicy(default_budget=1e9), state_buckets=N,
-        sketch_kind="cuckoo",
-    )
-    pk = keyed_pages(pages, n_parts=N)
-    state = init_state(spark, seeds, None, config)
-    keys = materialize_keyed(
-        _keys_for_ids(spark, [0, 30, 60]), n_parts=N, key="url_hash"
-    )
-    targets = {r["url_hash"] for r in keys.collect()}
-    state = mark_seen(spark, state, keys, config)
-    state, sched1, _ = crawl_round(spark, state, pk, config)
-    assert not ({r["url_hash"] for r in sched1.collect()} & targets)
+def _n_maybe_seen(rows, sketch):
+    return sketch_flag_maybe_seen(rows, sketch).filter(F.col("_maybe")).count()
 
-    state = forget_urls(spark, state, keys, config)
-    re_seeds = spark.createDataFrame(
-        [(u, 5.0) for u in url_for_ids(np.array([0, 30, 60]))],
-        schema=SEEDS,
-    )
-    rows = assign_salts_static(
-        seeds_to_frontier(spark, re_seeds, batch_id=state.batch_id),
-        state.salts,
-    )
+
+def test_mark_seen_then_forget_restores_scheduling(spark):
+    """Round-trip under both tiers with sketch_kind="cuckoo": mark_seen
+    suppresses, forget_urls + re-injection schedules again (coherence
+    across representations in BOTH directions). The sketch tier carries a
+    real cuckoo sketch, so its insert and delete are both on the path."""
+    from dataclasses import replace
+
     from spiderspark.crawl import _frontier_cols
     from spiderspark.frontier import dedup_within_batch
 
-    seg = materialize_keyed(
-        dedup_within_batch(_frontier_cols(rows).repartition(N, "url_hash")),
-        N, key=state.frontier.key, sort=state.frontier.sort_cols,
-    )
-    state = __import__("dataclasses").replace(
-        state, frontier=state.frontier.append(seg)
-    )
-    state, sched2, _ = crawl_round(spark, state, pk, config)
-    got = {r["url_hash"] for r in sched2.collect()}
-    assert targets <= got, "forgotten urls must schedule again"
+    pages = spark.createDataFrame(gen_pages_pdf(np.arange(120), 120), schema=PAGES)
+    seeds = spark.createDataFrame(seeds_pdf(12, 120), schema=SEEDS)
+    pk = keyed_pages(pages, n_parts=N)
+    for tier in ("mirror", "sketch"):
+        config = CrawlConfig(
+            policy=HostPolicy(default_budget=1e9), state_buckets=N,
+            sketch_kind="cuckoo", seen_tier=tier,
+        )
+        state = init_state(spark, seeds, None, config)
+        keys = materialize_keyed(
+            _keys_for_ids(spark, [0, 30, 60]), n_parts=N, key="url_hash"
+        )
+        targets = {r["url_hash"] for r in keys.collect()}
+        state = mark_seen(spark, state, keys, config)
+        state, sched1, _ = crawl_round(spark, state, pk, config)
+        assert not ({r["url_hash"] for r in sched1.collect()} & targets)
+
+        re_seeds = spark.createDataFrame(
+            [(u, 5.0) for u in url_for_ids(np.array([0, 30, 60]))],
+            schema=SEEDS,
+        )
+        rows = assign_salts_static(
+            seeds_to_frontier(spark, re_seeds, batch_id=state.batch_id),
+            state.salts,
+        )
+        if tier == "sketch":
+            assert state.sketch.kind == "cuckoo"
+            assert _n_maybe_seen(rows, state.sketch) == 3
+        else:
+            assert state.sketch is None
+        state = forget_urls(spark, state, keys, config)
+        if tier == "sketch":  # the cuckoo sketch forgot them too
+            assert _n_maybe_seen(rows, state.sketch) == 0
+        seg = materialize_keyed(
+            dedup_within_batch(_frontier_cols(rows).repartition(N, "url_hash")),
+            N, key=state.frontier.key, sort=state.frontier.sort_cols,
+        )
+        state = replace(state, frontier=state.frontier.append(seg))
+        state, sched2, _ = crawl_round(spark, state, pk, config)
+        got = {r["url_hash"] for r in sched2.collect()}
+        assert targets <= got, f"forgotten urls must schedule again ({tier})"
 
 
 def test_mark_seen_accepts_warc_index_keys(spark, tmp_path):

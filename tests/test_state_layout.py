@@ -260,12 +260,13 @@ def test_empty_delta_dir_readable_and_harmless(spark):
 def test_crawl_round_with_nothing_newly_seen_commits(spark):
     """ADVICE r02 (high), end-to-end: a store-backed round in which NO url
     becomes seen (no page fetched, attempts left) must not crash commit —
-    the sketch-delta write is skipped for the empty newly-seen segment."""
+    the sketch-delta write (sketch tier) and the mirror-segment write
+    (default mirror tier) are both skipped for the empty newly-seen
+    segment."""
     from spiderspark.crawl import CrawlConfig, crawl_round, init_state, keyed_pages
     from spiderspark.politeness import HostPolicy
     from spiderspark.snapshots import ParquetManifestStore
 
-    store = ParquetManifestStore(tempfile.mkdtemp(prefix="snapstore-"))
     seeds = spark.createDataFrame(
         [(f"http://h{i}.example/p/{i}", 0.0) for i in range(20)],
         "url string, priority double",
@@ -274,15 +275,24 @@ def test_crawl_round_with_nothing_newly_seen_commits(spark):
     pages = keyed_pages(
         spark.createDataFrame([], "url string, html binary"), n_parts=4
     )
-    config = CrawlConfig(
-        policy=HostPolicy(default_budget=8.0), state_buckets=4, max_attempts=3
-    )
-    state = init_state(spark, seeds, None, config)
-    state, schedule, _log = crawl_round(spark, state, pages, config, store=store)
-    assert schedule.count() > 0
-    assert state.snapshot_id is not None
-    assert state.seen.total_rows() == 0  # nothing seen...
-    assert len(state.sketch.paths) == 0  # ...and no delta dir was written
+    for tier in ("mirror", "sketch"):
+        config = CrawlConfig(
+            policy=HostPolicy(default_budget=8.0), state_buckets=4,
+            max_attempts=3, seen_tier=tier,
+        )
+        store = ParquetManifestStore(tempfile.mkdtemp(prefix="snapstore-"))
+        state = init_state(spark, seeds, None, config)
+        state, schedule, _log = crawl_round(
+            spark, state, pages, config, store=store
+        )
+        assert schedule.count() > 0
+        assert state.snapshot_id is not None
+        assert state.seen.total_rows() == 0  # nothing seen...
+        if tier == "sketch":
+            assert len(state.sketch.paths) == 0  # ...and no delta dir written
+        else:
+            assert state.sketch is None
+            assert state.seen_sched.total_rows() == 0
 
 
 def test_durable_segment_keeps_layout_contract(spark):
