@@ -104,32 +104,36 @@ def schedule_round_df(
 ) -> DataFrame:
     """One scheduling round of the real engine (crawl.select_round — the
     same code crawl_round runs) over testdata-derived seeds, against a
-    pre-seen set covering every 7th document.
+    pre-seen set covering every 7th document. The pre-seen keys are one
+    exact seen segment in the engine's (host_bucket, salt) layout, routed
+    exactly as a frontier row for the same url would be.
 
-    ``tier`` picks the seen-filtering strategy select_round will take:
-    - "mirror" (the production default): the pre-seen keys live as the
-      scheduler-layout mirror segment; selection is the co-partitioned
-      zero-exchange anti-join + layout-satisfied WindowGroupLimit top-k.
-    - "fused": the pre-seen keys are folded into a bucket-partitioned
-      Bloom sketch delta routed by the frontier's (host_bucket, salt)
-      layout; selection runs the fused membership + guarded-prefix +
-      layout-kept-join pipeline (the low-read-volume tier).
-    - "exact": the classic fallback — chained co-partitioned anti-joins
-      against the url_hash-keyed seen table + two-phase window.
+    ``tier`` picks the branch select_round will take:
+    - "mirror" (the production default): the co-partitioned zero-exchange
+      anti-join against the seen table + layout-satisfied WindowGroupLimit
+      top-k.
+    - "exact": ``seen_tier="sketch"`` with its empty initial sketch — before
+      its first delta the sketch tier filters through the exact table
+      alone, so this is the same exact branch reached from the other tier.
+    - "fused": ``seen_tier="sketch"`` with the pre-seen keys also folded
+      into a bucket-partitioned Bloom sketch delta routed by the frontier's
+      (host_bucket, salt) layout; selection runs the fused membership +
+      guarded-prefix + layout-kept-join pipeline (the low-read-volume tier).
     All three produce the identical schedule (the sketch has no false
-    negatives and its maybe-sliver is exactly anti-joined; the mirror is
-    exact by construction).
+    negatives and its maybe-sliver is exactly anti-joined; the exact table
+    is exact by construction).
 
     ``forget_mod`` (mirror tier only): after seeding the pre-seen state,
     TTL-expire every ``forget_mod``-th document's URL via
-    crawl.forget_urls — the coherent delete across the exact seen table
-    AND the scheduler-layout mirror — so those documents become
-    schedulable again. With forget_mod=14 the effective exclusion set is
-    closed-form (doc_id % 7 == 0 AND doc_id % 14 != 0), which is what
-    makes the re-crawl-after-expiry path ORACLE-checkable."""
+    crawl.forget_urls, so those documents become schedulable again. With
+    forget_mod=14 the effective exclusion set is closed-form
+    (doc_id % 7 == 0 AND doc_id % 14 != 0), which is what makes the
+    re-crawl-after-expiry path ORACLE-checkable."""
     import dataclasses
 
-    from spiderspark.crawl import CrawlConfig, forget_urls, init_state, select_round
+    from spiderspark.crawl import (
+        FRONTIER_KEY, CrawlConfig, forget_urls, init_state, select_round,
+    )
     from spiderspark.frontier import with_canonical, write_sketch_delta
     from spiderspark.politeness import HostPolicy
     from spiderspark.schedule import assign_salts_static, to_schedule
@@ -141,40 +145,28 @@ def schedule_round_df(
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     config = CrawlConfig(
         policy=HostPolicy(default_budget=budget),
-        use_bloom=tier == "fused",
         seen_tier="mirror" if tier == "mirror" else "sketch",
     )
     state = init_state(spark, _documents_as_seeds(spark, sf_dir), None, config)
 
-    seen_rows = with_canonical(_pre_seen_urls(spark, sf_dir))
     seen = SegmentedTable.from_df(
-        seen_rows.select(
-            "url_hash", F.lit(0).cast("long").alias("first_batch")
+        assign_salts_static(
+            with_canonical(_pre_seen_urls(spark, sf_dir)), state.salts
+        ).select(
+            *FRONTIER_KEY, "url_hash", F.lit(0).cast("long").alias("first_batch")
         ),
         n_parts=config.state_buckets,
+        key=FRONTIER_KEY,
     )
     sketch = state.sketch
-    seen_sched = state.seen_sched
-    # the pre-seen keys routed exactly as a frontier row for the same url
-    # would be (static salt from the crawl's salt table), so membership
-    # tasks / mirror partitions find them locally
-    routed = assign_salts_static(seen_rows, state.salts)
     if tier == "fused":
         sketch = write_sketch_delta(
-            routed.repartition(config.state_buckets, *sketch.routing),
+            seen.segments[0],
             os.path.join(state.workdir, "sketch_delta_preseen"),
             sketch,
             assume_keyed_layout=True,
         )
-    if tier == "mirror":
-        seen_sched = SegmentedTable.from_df(
-            routed.select("host_bucket", "salt", "url_hash"),
-            n_parts=config.state_buckets,
-            key=("host_bucket", "salt"),
-        )
-    state = dataclasses.replace(
-        state, seen=seen, sketch=sketch, seen_sched=seen_sched
-    )
+    state = dataclasses.replace(state, seen=seen, sketch=sketch)
     if forget_mod is not None:
         if tier != "mirror":
             raise ValueError("forget_mod is a mirror-tier exercise")
@@ -195,16 +187,18 @@ def schedule_round_df(
 
 
 def crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship, VALUE-CHECKED on ALL THREE scheduler tiers: the full
-    engine path (canonicalize → hash → within-batch dedup → seen filtering →
-    politeness budget → skew-salted per-host top-k → deterministic global
-    rank) run through the exact-tier fallback, the FUSED bloom membership +
-    guarded-prefix + layout-kept-join pipeline, and the scheduler-layout
-    seen-MIRROR path (the production default), each tagged with its
-    ``path``. The tiers are provably schedule-identical (Bloom has no false
-    negatives; the maybe sliver is exactly anti-joined; the guarded prefix
-    is an exact superset; the mirror anti-join is exact by construction —
-    test_fused_schedule), so ONE path-independent SQL oracle checks all:
+    """The flagship, VALUE-CHECKED on both select_round branches from both
+    seen tiers: the full engine path (canonicalize → hash → within-batch
+    dedup → seen filtering → politeness budget → skew-salted per-host top-k
+    → deterministic global rank) run through the exact branch from the
+    sketch tier before its first delta ('exact'), the FUSED bloom
+    membership + guarded-prefix + layout-kept-join pipeline ('fused'), and
+    the mirror tier (the production default, 'mirror'), each tagged with
+    its ``path``. The legs are provably schedule-identical (Bloom has no
+    false negatives; the maybe sliver is exactly anti-joined; the guarded
+    prefix is an exact superset; the seen anti-join is exact by
+    construction — test_fused_schedule), so ONE path-independent SQL
+    oracle checks all:
     canonicalization closed form + seen exclusion (doc_id % 7) + per-host
     row_number ≤ budget + global row_number, cross-joined with the three
     path tags. url_hash is dropped from the projection (DuckDB lacks
@@ -214,10 +208,10 @@ def crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A FOURTH leg ('mirror_forget') value-checks TTL expiry end to end:
     same mirror-tier state, then crawl.forget_urls expires every 14th
-    document's URL from BOTH seen representations before selection, so
+    document's URL from the seen table before selection, so
     exactly the even multiples of 7 become schedulable again. Its oracle
     is the same closed form with exclusion doc_id % 7 = 0 AND
-    doc_id % 14 <> 0 — if any seen representation missed the delete, the
+    doc_id % 14 <> 0 — if the delete missed the seen table, the
     re-admitted rows (and the per-host budget ranks they shift) hash
     differently."""
     out = None

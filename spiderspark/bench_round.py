@@ -202,11 +202,8 @@ def one_round_fused(
     # join_back=keyed: the kept keys rejoin the checkpointed segment — the
     # 8M-row side pays the budget+robots pass ONCE (in the thin pass); the
     # tiny kept set re-derives those columns for the final window.
-    # layout join-back is the default (fastest measured AND the 10^10
-    # configuration); SPIDERSPARK_BENCH_KEPT_JOIN=broadcast A/Bs the old way
     kept = membership_prefix_topk(
-        gated, sketch, join_back=keyed,
-        join_strategy=os.environ.get("SPIDERSPARK_BENCH_KEPT_JOIN", "layout"),
+        gated, sketch, join_back=keyed
     ).localCheckpoint(eager=True)
     t_kept = time.time() - t2  # gating pass + join-back + checkpoint
     definite = kept.filter(~F.col("_maybe")).drop("_maybe")

@@ -13,15 +13,18 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
 - The frontier is a SegmentedTable in the SCHEDULER layout: hash-partitioned
   by (host_bucket, salt) — salt from the per-crawl static table — at a
   fixed ``state_buckets``, sorted by (host_bucket, salt, url_hash). The
-  seen set stays keyed by url_hash. Every per-round touch of the big state
-  — schedule removal, delta resolve, seen anti-probes — plans as a
-  co-partitioned SMJ or broadcast probe with ZERO exchange and ZERO sort on
-  the stored side. Network per round is O(delta + schedule), not O(state).
-- Scheduling itself never exchanges the candidates either: ONE partition-
-  local pass (frontier.membership_prefix_topk) fuses sketch membership with
-  the exact per-host budget pre-selection; only the O(hosts × budget) kept
-  set reaches the final window. The classic two-phase window remains as the
-  exact-tier-only fallback (no sketch yet / use_bloom=False).
+  exact seen set is ONE table in the same layout (rows host_bucket, salt,
+  url_hash, first_batch). Every per-round touch of the big state — schedule
+  removal, delta resolve, seen anti-probes — plans as a co-partitioned SMJ
+  or broadcast probe with ZERO exchange and ZERO sort on the stored side.
+  Network per round is O(delta + schedule), not O(state).
+- Scheduling itself never exchanges the candidates either. The mirror tier
+  anti-joins each gated segment against the seen table in place and ranks
+  phase 1 layout-satisfied; the sketch tier runs ONE partition-local pass
+  (frontier.membership_prefix_topk) fusing sketch membership with the exact
+  per-host budget pre-selection, and probes only the maybe-seen sliver
+  against the seen table. Either way only the O(hosts × budget) kept set
+  reaches the final window.
 - The URL-seen sketch is distributed (frontier.SketchRef): membership is a
   partition-local side-read of only the task's bucket slice (bucket routing
   == the frontier partitioning, so salting also evens slice sizes under
@@ -29,7 +32,7 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
   is a distributed groupBy(bucket) merge. Bloom (default) or cuckoo
   (deletion support) tiers behind the same rows. Nothing sketch-shaped ever
   lives on the driver or in a broadcast. Only ``seen_tier="sketch"`` keeps
-  a sketch; the default mirror tier filters through its exact mirror.
+  a sketch; the default mirror tier filters through the exact table alone.
 - Iterative-loop hygiene: each round's state is re-materialized through
   ``materialize_keyed`` (plans stay shallow; the checkpoint write is
   partition-local — no network) or, with ``durable_state=True``, through
@@ -50,7 +53,6 @@ from .canon import extract_outlinks_series, extract_text_series
 from .frontier import (
     SketchRef,
     compact_sketch,
-    dedup_against_seen,
     dedup_within_batch,
     host_bucket_col,
     membership_prefix_topk,
@@ -69,12 +71,11 @@ from .politeness import (
 )
 from .schedule import (
     assign_salts_static,
-    per_host_topk,
     per_host_topk_final,
     static_salt_table,
     to_schedule,
 )
-from .schemas import FRONTIER, HOST_STATE, SEEN, SEEN_SCHED
+from .schemas import FRONTIER, HOST_STATE, SEEN
 from .snapshots import SnapshotStore
 from .state import (
     SegmentedTable,
@@ -94,34 +95,32 @@ FRONTIER_KEY = ("host_bucket", "salt")
 class CrawlConfig:
     policy: HostPolicy = field(default_factory=HostPolicy)
     # state_buckets is BOTH the state-partition count and the sketch bucket
-    # count: bucket = pmod(hash(url_hash), state_buckets) equals the stored
-    # partition id, so membership tasks read exactly one sketch slice.
-    # Sandbox default sized for local[32]; cluster: O(total cores), fixed
-    # for the lifetime of a crawl.
+    # count: bucket = pmod(hash(host_bucket, salt), state_buckets) equals
+    # the stored partition id, so membership tasks read exactly one sketch
+    # slice. Sandbox default sized for local[32]; cluster: O(total cores),
+    # fixed for the lifetime of a crawl.
     state_buckets: int = 32
-    # the sketch knobs (bloom_capacity_per_bucket, bloom_fpp, use_bloom,
-    # sketch_kind) apply only under seen_tier="sketch": the mirror tier
-    # builds no sketch (it only keeps a committed one when resuming a
-    # snapshot that has no mirror, unless use_bloom=False — see resume)
+    # the sketch knobs (bloom_capacity_per_bucket, bloom_fpp, sketch_kind)
+    # apply only under seen_tier="sketch": the mirror tier builds no sketch
     bloom_capacity_per_bucket: int = 1 << 16
     bloom_fpp: float = 0.01
     skew_threshold: int = 50_000
-    # sketch tier only: False runs it exact-only (no sketch; the classic
-    # anti-join + two-phase window)
-    use_bloom: bool = True
-    # how per-round seen filtering runs over the stored frontier segments:
-    # - "mirror" (default; round-5 measured winner): the seen set keeps an
-    #   EXACT second copy in the scheduler layout ((host_bucket, salt)
-    #   partitioned, sorted on (..., url_hash)), so the filter is one
-    #   co-partitioned zero-exchange/zero-sort LEFT-ANTI merge join —
-    #   entirely JVM-side (the fused bloom pass's dominant cost was the
-    #   JVM→Python Arrow IPC crossing of every candidate, measured 85% of
-    #   the stage; 32M/32: schedule stage 19-23 s → 5.4-9 s, same digest).
-    # - "sketch": the bloom/cuckoo membership + guarded-prefix pre-selection
-    #   (frontier.membership_prefix_topk) — reads ~1.2 bits per seen key
-    #   instead of the mirror's 16 key bytes: the right tier when the seen
-    #   set dwarfs what per-task sequential reads should pay per round. The
-    #   only tier that builds a sketch.
+    # how per-round seen filtering runs over the stored frontier segments.
+    # Both tiers keep the same exact seen table in the scheduler layout
+    # ((host_bucket, salt) partitioned, sorted on (..., url_hash)):
+    # - "mirror" (default; round-5 measured winner): the filter is one
+    #   co-partitioned zero-exchange/zero-sort LEFT-ANTI merge join against
+    #   that table — entirely JVM-side (the fused bloom pass's dominant cost
+    #   was the JVM→Python Arrow IPC crossing of every candidate, measured
+    #   85% of the stage; 32M/32: schedule stage 19-23 s → 5.4-9 s, same
+    #   digest).
+    # - "sketch": a bloom/cuckoo sketch in front of the exact table, read by
+    #   the membership + guarded-prefix pre-selection
+    #   (frontier.membership_prefix_topk) — ~1.2 bits per seen key instead
+    #   of the exact table's 16 key bytes: the right tier when the seen set
+    #   dwarfs what per-task sequential reads should pay per round, or for
+    #   TTL expiry at that scale. The only tier that builds a sketch; until
+    #   its first delta exists it filters like the mirror tier.
     # Both tiers produce byte-identical schedules (test_fused_schedule).
     seen_tier: str = "mirror"
     # sketch tier only — filter family: "bloom" (default) or "cuckoo" (adds
@@ -135,15 +134,6 @@ class CrawlConfig:
     max_attempts: int = 2
     # LSM knobs: segments/delta-dirs allowed before the amortized compaction
     max_segments: int = 4
-    # how the budget-preselected kept keys rejoin the big frontier segment:
-    # "layout" (default — kept keys repartition on the frontier routing and
-    # join on (host_bucket, salt, url_hash): layout-satisfied, the big side
-    # moves zero bytes, nothing is ever driver-sized, one fewer driver
-    # round-trip than a broadcast build; ALSO measured fastest at sandbox
-    # scale: 219k vs 200k URLs/s best-of interleaved at 2M/32 cores) or
-    # "broadcast" (kept set must fit a broadcast; kept for A/B). See
-    # frontier.membership_prefix_topk.
-    kept_join: str = "layout"
     # durable_state=True routes every state-segment materialization through
     # bucketed parquet tables (state.materialize_keyed_durable) instead of
     # localCheckpoint executor blocks: the layout contract survives the disk
@@ -160,26 +150,33 @@ class CrawlConfig:
 @dataclass
 class CrawlState:
     frontier: SegmentedTable
+    # the ONE exact URL-seen table, in the frontier's layout: key =
+    # FRONTIER_KEY, rows schemas.SEEN (host_bucket, salt, url_hash,
+    # first_batch), sorted on (host_bucket, salt, url_hash)
     seen: SegmentedTable
     host_state: DataFrame
-    # the sketch tier's: None with use_bloom=False and under the mirror
-    # tier, unless that tier resumed a snapshot with no mirror (see resume)
+    # the sketch tier's bloom/cuckoo sketch in front of ``seen``; None under
+    # the mirror tier
     sketch: SketchRef | None
     batch_id: int
     workdir: str
     k_cap: int
     # per-crawl STATIC (host, n_salts) table: salt must be a stable function
     # of the url for the crawl's lifetime so (host_bucket, salt) can be the
-    # frontier's physical partitioning AND the sketch routing. The schedule
+    # state's physical partitioning AND the sketch routing. The schedule
     # is invariant to the salting scheme, so a stale size estimate costs
-    # balance, never correctness. Re-salting requires a sketch rebuild.
-    salts: DataFrame | None = None
+    # balance, never correctness. Re-salting requires a seen-table and
+    # sketch rebuild.
+    salts: DataFrame
     snapshot_id: int | None = None
-    # the seen set's scheduler-layout mirror (seen_tier="mirror"):
-    # key = FRONTIER_KEY, rows (host_bucket, salt, url_hash) — None when the
-    # tier is off or the snapshot predates it (select_round then falls back
-    # to the sketch / classic branches)
-    seen_sched: SegmentedTable | None = None
+
+    @property
+    def seen_sched(self) -> None:
+        """Always None: the scheduler-layout mirror of the seen set is now
+        ``seen`` itself. Kept, read-only, because the benchmark's state
+        counters (perfbench/workloads.py ``_state_counts``) still read this
+        name; drop it when that harness next changes."""
+        return None
 
 
 @F.pandas_udf(T.StringType())
@@ -198,29 +195,31 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+# every state table's sort order within its FRONTIER_KEY partitions
+_STATE_SORT = (*FRONTIER_KEY, "url_hash")
+
+
 def _keyed_mat(config: CrawlConfig, workdir: str):
-    """The state-segment materializer for this crawl: in-memory layout pin
-    (default fast path) or durable bucketed tables (fault-tolerant mode)."""
+    """The state-segment materializer for this crawl: pins ``df`` in the
+    state layout (FRONTIER_KEY-partitioned at ``state_buckets``, sorted on
+    ``_STATE_SORT``) — in memory (default fast path) or as durable bucketed
+    tables (fault-tolerant mode). ``repartition=False`` is for plans already
+    in that layout (a partition-local write, no exchange)."""
+    n = config.state_buckets
     if not config.durable_state:
-        def mat(df, n_parts=None, key="url_hash", repartition=True, sort=None):
-            return materialize_keyed(df, n_parts, key, repartition, sort)
+        def mat(df, repartition=True):
+            return materialize_keyed(df, n, FRONTIER_KEY, repartition, _STATE_SORT)
         return mat
     from .state import materialize_keyed_durable
 
     base = os.path.join(workdir, "segments")
 
-    def mat(df, n_parts=None, key="url_hash", repartition=True, sort=None):
+    def mat(df, repartition=True):
         return materialize_keyed_durable(
-            df, n_parts or config.state_buckets, key, repartition, sort, base
+            df, n, FRONTIER_KEY, repartition, _STATE_SORT, base
         )
 
     return mat
-
-
-def _wants_sketch(config: CrawlConfig) -> bool:
-    """Only the sketch tier reads the URL-seen sketch (select_round's mirror
-    branch never does), so only it builds one."""
-    return config.seen_tier == "sketch" and config.use_bloom
 
 
 def _new_sketch(config: CrawlConfig) -> SketchRef:
@@ -232,6 +231,27 @@ def _new_sketch(config: CrawlConfig) -> SketchRef:
 
 def _frontier_cols(df: DataFrame) -> DataFrame:
     return df.select(*[f.name for f in FRONTIER.fields])
+
+
+def _routed(df: DataFrame, salts: DataFrame) -> DataFrame:
+    """(url_hash, url_norm, host) rows → (host_bucket, salt, url_hash): the
+    slot the url's frontier and seen rows live in."""
+    return assign_salts_static(
+        df.select(
+            "url_hash", "url_norm", "host",
+            host_bucket_col(F.col("host")).alias("host_bucket"),
+        ),
+        salts,
+    ).select(*_STATE_SORT)
+
+
+def _pinned_keys(keys: DataFrame, n: int) -> DataFrame:
+    """A routed key batch deduped and pinned in the state layout — one
+    exchange; probes against the stored segments are then co-partitioned."""
+    return materialize_keyed(
+        keys.repartition(n, *FRONTIER_KEY).distinct(),
+        n, FRONTIER_KEY, repartition=False, sort=_STATE_SORT,
+    )
 
 
 def init_state(
@@ -268,33 +288,23 @@ def init_state(
         os.makedirs(workdir, exist_ok=True)
     else:
         workdir = tempfile.mkdtemp(prefix="spiderspark-state-")
-    frontier0 = SegmentedTable.empty(n, key=FRONTIER_KEY)
-    seg0 = _keyed_mat(config, workdir)(
-        dedup_within_batch(_frontier_cols(rows)),
-        n_parts=n,
-        key=FRONTIER_KEY,
-        sort=frontier0.sort_cols,
-    )
-    frontier = frontier0.append(seg0)
-    sketch = _new_sketch(config) if _wants_sketch(config) else None
+    seg0 = _keyed_mat(config, workdir)(dedup_within_batch(_frontier_cols(rows)))
+    frontier = SegmentedTable((seg0,), n, key=FRONTIER_KEY)
+    # only the sketch tier reads a sketch, so only it builds one
+    sketch = _new_sketch(config) if config.seen_tier == "sketch" else None
     caps = host_state.agg(F.max("capacity").alias("m")).collect()
     k_cap = int(
         max(config.policy.default_budget, (caps[0]["m"] or 0) if caps else 0)
     )
     return CrawlState(
         frontier=frontier,
-        seen=SegmentedTable.empty(n),
+        seen=SegmentedTable.empty(n, key=FRONTIER_KEY),
         host_state=host_state,
         sketch=sketch,
         batch_id=0,
         workdir=workdir,
         k_cap=k_cap,
         salts=salts,
-        seen_sched=(
-            SegmentedTable.empty(n, key=FRONTIER_KEY)
-            if config.seen_tier == "mirror"
-            else None
-        ),
     )
 
 
@@ -324,102 +334,76 @@ def select_round(
     """Steps 1-4 of a crawl round: dedup + politeness + per-host budget
     selection over the current state — the scheduling core, factored out so
     the driver contract (``__spark_entry__.schedule_round_df``) value-checks
-    the EXACT code path ``crawl_round`` runs, fused tier included.
+    the EXACT code path ``crawl_round`` runs, sketch branch included.
 
-    Mirror tier (default): each gated segment anti-joins the seen set's
-    scheduler-layout mirror — co-partitioned SMJ, zero exchange and zero
-    sort on BOTH sides, no Python crossing — then phase-1 ranks within
-    (host_bucket, salt, host), layout-satisfied (no exchange) with the
-    k_cap literal keeping the WindowGroupLimit bounded sort; only the
-    O(hosts × budget) phase-1 winners reach the final window.
+    Politeness/robots gate each stored segment in place (broadcast joins —
+    layout preserved). Then one of two branches:
 
-    Sketch tier: politeness/robots gate each stored segment in place
-    (broadcast joins — layout preserved), then ONE partition-local pass
-    fuses bloom membership with the exact guarded-prefix budget
-    pre-selection (frontier.membership_prefix_topk) — the big frontier
-    segments are never exchanged AND never fully ranked; only the kept set
-    moves: the maybe-seen sliver to the seen layout for the exact
-    anti-join, the survivors into the final per-host window. The tier of
-    choice when the seen set dwarfs per-round sequential-read budgets
-    (~1.2 bits vs 16 bytes read per seen key)."""
-    if config.seen_tier == "mirror" and state.seen_sched is not None:
-        from pyspark.sql import Window
+    - Exact (the mirror tier; the sketch tier before its first delta):
+      each gated segment anti-joins the seen table — co-partitioned SMJ,
+      zero exchange and zero sort on BOTH sides, no Python crossing — then
+      phase-1 ranks within (host_bucket, salt, host), layout-satisfied (no
+      exchange) with the k_cap literal keeping the WindowGroupLimit bounded
+      sort.
+    - Sketch (``state.sketch`` has deltas): ONE partition-local pass fuses
+      sketch membership with the exact guarded-prefix budget pre-selection
+      (frontier.membership_prefix_topk) — the big frontier segments are
+      never exchanged AND never fully ranked. Only the maybe-seen sliver of
+      the kept set meets the seen table, in that table's own layout. The
+      tier of choice when the seen set dwarfs per-round sequential-read
+      budgets (~1.2 bits vs 16 bytes read per seen key).
 
-        from .schedule import order_cols
+    Either way only the O(hosts × budget) kept rows reach the final window.
+    """
+    from pyspark.sql import Window
 
-        kept_parts = []
-        for seg in state.frontier.segments:
-            budgeted = join_host_state(seg, state.host_state, config.policy)
-            gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
-            unseen = state.seen_sched.anti_probe(gated)
-            w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(
-                *order_cols()
-            )
-            kept_parts.append(
-                unseen.withColumn("_r1", F.row_number().over(w1))
-                .filter(
-                    (F.col("_r1") <= F.lit(int(state.k_cap)))
-                    & (F.col("_r1") <= F.col("host_budget"))
-                )
-                .drop("_r1")
-            )
-        if not kept_parts:
-            return spark.createDataFrame([], FRONTIER).withColumn(
-                "host_budget", F.lit(0).cast("long")
-            )
-        kept = kept_parts[0]
-        for p in kept_parts[1:]:
-            kept = kept.unionByName(p)
-        return per_host_topk_final(kept, "host_budget", k_cap=state.k_cap)
-    use_fused = state.sketch is not None and len(state.sketch.paths) > 0
-    if use_fused:
-        survivor_parts = []
-        for seg in state.frontier.segments:
-            budgeted = join_host_state(seg, state.host_state, config.policy)
-            gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
+    from .schedule import order_cols
+
+    use_sketch = state.sketch is not None and len(state.sketch.paths) > 0
+    parts = []
+    for seg in state.frontier.segments:
+        budgeted = join_host_state(seg, state.host_state, config.policy)
+        gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
+        if use_sketch:
             # join_back=seg: the thin pass reads the gated view once; the
             # kept keys rejoin the CHECKPOINTED segment, so the big side
             # never pays a second budget+robots pass — those columns are
             # re-derived on the tiny kept set below
             kept = _materialize(
-                membership_prefix_topk(
-                    gated, state.sketch, join_back=seg,
-                    join_strategy=config.kept_join,
-                )
+                membership_prefix_topk(gated, state.sketch, join_back=seg)
             )
             definite = kept.filter(~F.col("_maybe")).drop("_maybe")
             sliver = (
                 kept.filter(F.col("_maybe"))
                 .drop("_maybe")
-                .repartition(state.seen.n_parts, "url_hash")
+                .repartition(state.seen.n_parts, *FRONTIER_KEY)
             )
-            survivor_parts.append(
-                definite.unionByName(state.seen.anti_probe(sliver))
-            )
-        survivors = survivor_parts[0]
-        for p in survivor_parts[1:]:
-            survivors = survivors.unionByName(p)
-        survivors = robots_gate(
-            join_host_state(survivors, state.host_state, config.policy)
-        ).filter(F.col("host_budget") > 0)
-        selected = per_host_topk_final(survivors, "host_budget", k_cap=state.k_cap)
-    else:
-        # exact-tier-only fallback (use_bloom=False, or round 1 before any
-        # delta exists): candidates pay one O(candidates) exchange to the
-        # seen layout for the anti-join, then the classic two-phase window
-        handles: list[DataFrame] = []
-        candidates = _materialize(
-            dedup_against_seen(
-                spark, state.frontier, state.seen, state.sketch,
-                persist_handles=handles,
-            )
+            parts.append(definite.unionByName(state.seen.anti_probe(sliver)))
+            continue
+        unseen = state.seen.anti_probe(gated)
+        w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(
+            *order_cols()
         )
-        for h in handles:
-            h.unpersist()
-        budgeted = join_host_state(candidates, state.host_state, config.policy)
-        gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
-        selected = per_host_topk(gated, "host_budget", k_cap=state.k_cap)
-    return selected
+        parts.append(
+            unseen.withColumn("_r1", F.row_number().over(w1))
+            .filter(
+                (F.col("_r1") <= F.lit(int(state.k_cap)))
+                & (F.col("_r1") <= F.col("host_budget"))
+            )
+            .drop("_r1")
+        )
+    if not parts:
+        return spark.createDataFrame([], FRONTIER).withColumn(
+            "host_budget", F.lit(0).cast("long")
+        )
+    kept = parts[0]
+    for p in parts[1:]:
+        kept = kept.unionByName(p)
+    if use_sketch:
+        kept = robots_gate(
+            join_host_state(kept, state.host_state, config.policy)
+        ).filter(F.col("host_budget") > 0)
+    return per_host_topk_final(kept, "host_budget", k_cap=state.k_cap)
 
 
 def crawl_round(
@@ -516,26 +500,34 @@ def crawl_round(
     )
     mat = _keyed_mat(config, state.workdir)
     # 10. politeness accounting reads only the pinned schedule; the
-    #     newly-seen segment reads only the pinned fetch. Two independent
-    #     small jobs — overlapped, because run serially each costs a fixed
-    #     driver round-trip that never scales with cores (the measured
-    #     non-scaling term of the strong pair; see state.materialize_many).
+    #     newly-seen segment reads only the pinned fetch, its keys routed by
+    #     their TRUE (host_bucket, salt) — the slot a future frontier row for
+    #     the url lands in. Two independent small jobs — overlapped, because
+    #     run serially each costs a fixed driver round-trip that never
+    #     scales with cores (the measured non-scaling term of the strong
+    #     pair; see state.materialize_many).
     sched_counts = schedule.groupBy("host").agg(F.count(F.lit(1)).alias("scheduled"))
     newly_seen_seg, host_state = materialize_many([
         lambda: mat(
-            fetched.filter(done_cond).select(
-                "url_hash", F.lit(batch_id).cast("long").alias("first_batch")
-            ),
-            n_parts=n,
+            _routed(fetched.filter(done_cond), state.salts).withColumn(
+                "first_batch", F.lit(batch_id).cast("long")
+            )
         ),
         lambda: _materialize(
             update_host_state(state.host_state, sched_counts, config.policy)
         ),
     ])
-    seen = state.seen.append(newly_seen_seg).maybe_compact(
-        config.max_segments,
-        materializer=lambda df: mat(df, n_parts=n),
-    )
+    # skip the segment and the sketch delta when nothing became seen this
+    # round (drained frontier / all fetches failed with attempts left): an
+    # empty segment adds a useless probe to every later anti-join, an empty
+    # sketch write a files-less directory to every membership side-read.
+    # The segment is checkpointed, so the probe is a partition-local scan.
+    have_newly_seen = not newly_seen_seg.isEmpty()
+    seen = state.seen
+    if have_newly_seen:
+        seen = seen.append(newly_seen_seg).maybe_compact(
+            config.max_segments, materializer=mat
+        )
 
     requeued = fetched.filter(~done_cond).select(
         "url",
@@ -556,83 +548,31 @@ def crawl_round(
         ).unionByName(requeued),
         state.salts,
     )
-    # delta is O(discovered + requeued): it pays two small exchanges — the
-    # url_hash layout for the within-batch dedup + seen anti-probe, then the
-    # frontier (hb, salt) layout for the resolve. The big tables never move.
+    # delta is O(discovered + requeued) and pays ONE small exchange, into
+    # the state layout: the within-batch dedup then groups in place, and the
+    # seen anti-probe below and the resolve are co-partitioned with the
+    # stored tables. The big tables never move.
     delta = dedup_within_batch(
-        _frontier_cols(delta).repartition(n, "url_hash")
+        _frontier_cols(delta).repartition(n, *FRONTIER_KEY),
+        extra_keys=FRONTIER_KEY,
     )
     delta_plan = insertion_gate(delta, state.host_state)  # never insert dead rows
 
-    # 9. sketch'/mirror' inputs: this round's newly-seen keys routed by
-    #    their TRUE (host_bucket, salt) — the same routing a future frontier
-    #    row for the url will carry into its membership task / its mirror
-    #    anti-join partition. Prepared here so the mirror segment pin and
-    #    the sketch delta write (both independent of the frontier delta) can
-    #    run CONCURRENTLY with the round's dominant job below.
+    # 9. the frontier delta pin and the sketch delta write are independent:
+    #    run them CONCURRENTLY. The sketch delta is written straight from the
+    #    pinned newly-seen segment — its layout is the sketch's bucketing.
     sketch = state.sketch
-    seen_sched = state.seen_sched
-    # skip them when nothing became seen this round (drained frontier / all
-    # fetches failed with attempts left): an empty write would leave a
-    # files-less directory and add a useless path to every future membership
-    # side-read. newly_seen_seg is checkpointed, so the emptiness probe is a
-    # cheap partition-local scan.
-    have_newly_seen = not newly_seen_seg.isEmpty()
-    newly_routed = None
-    if (sketch is not None or seen_sched is not None) and have_newly_seen:
-        newly_routed = assign_salts_static(
-            fetched.filter(done_cond).select(
-                "url_hash", "url_norm", "host",
-                host_bucket_col(F.col("host")).alias("host_bucket"),
-            ),
-            state.salts,
-        ).repartition(n, *FRONTIER_KEY)
-
-    thunks = [
-        lambda: mat(
-            seen.anti_probe(_frontier_cols(delta_plan)),
-            n_parts=n,
-            key=FRONTIER_KEY,
-            sort=state.frontier.sort_cols,
-        )
-    ]
-    mirror_idx = sketch_idx = None
-    if seen_sched is not None and have_newly_seen:
-        mirror_idx = len(thunks)
-        thunks.append(
-            lambda: mat(
-                newly_routed.select("host_bucket", "salt", "url_hash"),
-                n_parts=n,
-                key=FRONTIER_KEY,
-                repartition=False,
-                sort=seen_sched.sort_cols,
-            )
-        )
+    thunks = [lambda: mat(seen.anti_probe(delta_plan), repartition=False)]
     if sketch is not None and have_newly_seen:
         sketch_path = os.path.join(state.workdir, f"sketch_delta_{batch_id:06d}")
-        # a resumed pre-schema sketch may route by url_hash — re-key for it
-        for_sketch = (
-            newly_routed
-            if tuple(sketch.routing) == FRONTIER_KEY
-            else newly_routed.repartition(n, *sketch.routing)
-        )
-        sketch_idx = len(thunks)
         thunks.append(
             lambda: write_sketch_delta(
-                for_sketch, sketch_path, sketch, assume_keyed_layout=True
+                newly_seen_seg, sketch_path, sketch, assume_keyed_layout=True
             )
         )
-    results = materialize_many(thunks)
-    delta = results[0]
-    if mirror_idx is not None:
-        seen_sched = seen_sched.append(results[mirror_idx]).maybe_compact(
-            config.max_segments,
-            materializer=lambda df: mat(
-                df, n_parts=n, key=FRONTIER_KEY, sort=state.seen_sched.sort_cols
-            ),
-        )
-    if sketch_idx is not None:
-        sketch = results[sketch_idx]
+    delta, *sketch_out = materialize_many(thunks)
+    if sketch_out:
+        sketch = sketch_out[0]
         if len(sketch.paths) > config.max_segments:
             old_paths = sketch.paths
             sketch = compact_sketch(
@@ -647,17 +587,7 @@ def crawl_round(
     # schedule removal: anti-probe each stored segment with the scheduled
     # keys brought into the frontier layout — co-partitioned, zero exchange
     # and zero sort on the stored side (segments are sorted on join_cols)
-    sched_keys = (
-        assign_salts_static(
-            schedule.select(
-                "url_hash", "url_norm", "host",
-                host_bucket_col(F.col("host")).alias("host_bucket"),
-            ),
-            state.salts,
-        )
-        .select(*state.frontier.join_cols)
-        .repartition(n, *state.frontier.keys)
-    )
+    sched_keys = _routed(schedule, state.salts).repartition(n, *FRONTIER_KEY)
     remaining = SegmentedTable(
         tuple(
             seg.join(sched_keys, state.frontier.join_cols, "left_anti")
@@ -667,23 +597,16 @@ def crawl_round(
         key=state.frontier.key,
     )
     updated_plans, winners = resolve_frontier_delta(remaining, delta)
-    f_sort = state.frontier.sort_cols
     # the rewritten segments and the winners segment are disjoint-keyed and
     # independent — pin them concurrently (each is a small partition-local
     # job; serialized, this loop was another flat ~4 s/loop of the pair)
     segments = materialize_many(
-        [
-            (lambda p=p: mat(p, n_parts=n, key=FRONTIER_KEY, repartition=False, sort=f_sort))
-            for p in updated_plans
-        ]
-        + [lambda: mat(winners, n_parts=n, key=FRONTIER_KEY, repartition=False, sort=f_sort)]
+        [(lambda p=p: mat(p, repartition=False)) for p in updated_plans]
+        + [lambda: mat(winners, repartition=False)]
     )
     frontier = SegmentedTable(
         tuple(segments), n_parts=n, key=state.frontier.key
-    ).maybe_compact(
-        config.max_segments,
-        materializer=lambda df: mat(df, n_parts=n, key=FRONTIER_KEY, sort=f_sort),
-    )
+    ).maybe_compact(config.max_segments, materializer=mat)
 
     new_state = CrawlState(
         frontier=frontier,
@@ -694,21 +617,19 @@ def crawl_round(
         workdir=state.workdir,
         k_cap=state.k_cap,
         salts=state.salts,
-        seen_sched=seen_sched,
     )
 
     if config.durable_state:
         # every new segment is eagerly written above, so the old round's
         # bucketed tables (rewritten frontier segments; compacted-away seen
-        # segments) are reclaimable now — catalog entries AND files
+        # segments; an empty newly-seen segment never appended) are
+        # reclaimable now — catalog entries AND files
         from .state import drop_durable_segments
 
         drop_durable_segments(spark, state.frontier.segments, frontier.segments)
-        drop_durable_segments(spark, state.seen.segments, seen.segments)
-        if state.seen_sched is not None and seen_sched is not None:
-            drop_durable_segments(
-                spark, state.seen_sched.segments, seen_sched.segments
-            )
+        drop_durable_segments(
+            spark, state.seen.segments + (newly_seen_seg,), seen.segments
+        )
 
     if store is not None:
         new_state = commit_state(spark, new_state, schedule, fetch_log, store)
@@ -729,66 +650,31 @@ def mark_seen(
     index.select("url_hash", "url_norm", "host"), config)``.
 
     ``keys_df``: url_hash, url_norm, host. Semantics are EXACTLY the
-    crawl_round newly-seen path: already-seen keys are dropped (segments
-    stay disjoint), the remainder is appended to the exact table, routed
-    into the scheduler-layout mirror, folded into the sketch delta (bloom
-    AND cuckoo — insertion is additive), and matching frontier rows are
-    PRUNED through the same co-partitioned anti-joins as schedule removal,
-    so state never carries rows that can no longer schedule. Only a
-    sketch-tier state carries a sketch; a mirror-tier state writes none.
+    crawl_round newly-seen path: the keys are routed by their
+    (host_bucket, salt), already-seen keys are dropped (segments stay
+    disjoint), the remainder is appended to the exact table, folded into
+    the sketch delta (bloom AND cuckoo — insertion is additive), and
+    matching frontier rows are PRUNED through the same co-partitioned
+    anti-joins as schedule removal, so state never carries rows that can no
+    longer schedule. Only a sketch-tier state carries a sketch; a
+    mirror-tier state writes none.
 
     Cost/scale: O(keys) exchange to route the batch; stored segments are
     probed/rewritten with zero exchange and zero sort on their side."""
     mat = _keyed_mat(config, state.workdir)
-    n = state.seen.n_parts
-    batch_id = state.batch_id
-
-    keys = keys_df.select("url_hash", "url_norm", "host").dropDuplicates(
-        ["url_hash"]
+    keys = _pinned_keys(
+        _routed(keys_df, state.salts).withColumn(
+            "first_batch", F.lit(state.batch_id).cast("long")
+        ),
+        state.seen.n_parts,
     )
-    keyed = materialize_keyed(keys, n_parts=n, key=state.seen.key)
-    # genuinely-new keys only (keyed layout survives the anti-joins)
-    new_keys = mat(
-        state.seen.anti_probe(keyed), n_parts=n, repartition=False
-    )
-    if new_keys.isEmpty():
+    # genuinely-new keys only (the layout survives the anti-joins)
+    new_seg = mat(state.seen.anti_probe(keys), repartition=False)
+    if new_seg.isEmpty():
         return state
-
-    seen = state.seen.append(
-        mat(
-            new_keys.select(
-                "url_hash", F.lit(batch_id).cast("long").alias("first_batch")
-            ),
-            n_parts=n,
-            repartition=False,
-            sort=state.seen.sort_cols,
-        )
-    ).maybe_compact(
-        config.max_segments, materializer=lambda df: mat(df, n_parts=n)
+    seen = state.seen.append(new_seg).maybe_compact(
+        config.max_segments, materializer=mat
     )
-
-    routed = assign_salts_static(
-        new_keys.withColumn("host_bucket", host_bucket_col(F.col("host"))),
-        state.salts,
-    ).repartition(n, *FRONTIER_KEY)
-
-    seen_sched = state.seen_sched
-    if seen_sched is not None:
-        seen_sched = seen_sched.append(
-            mat(
-                routed.select("host_bucket", "salt", "url_hash"),
-                n_parts=n,
-                key=FRONTIER_KEY,
-                repartition=False,
-                sort=seen_sched.sort_cols,
-            )
-        ).maybe_compact(
-            config.max_segments,
-            materializer=lambda df: mat(
-                df, n_parts=n, key=FRONTIER_KEY,
-                sort=state.seen_sched.sort_cols,
-            ),
-        )
 
     sketch = state.sketch
     if sketch is not None:
@@ -799,38 +685,26 @@ def mark_seen(
         sketch_path = os.path.join(
             state.workdir, f"sketch_seed_{uuid.uuid4().hex[:8]}"
         )
-        for_sketch = (
-            routed
-            if tuple(sketch.routing) == FRONTIER_KEY
-            else routed.repartition(n, *sketch.routing)
-        )
         sketch = write_sketch_delta(
-            for_sketch, sketch_path, sketch, assume_keyed_layout=True
+            new_seg, sketch_path, sketch, assume_keyed_layout=True
         )
 
     # prune now-unschedulable frontier rows (same co-partitioned anti-join
     # class as crawl_round's schedule removal)
-    fr_keys = routed.select(*state.frontier.join_cols).repartition(
-        n, *state.frontier.keys
-    )
-    f_sort = state.frontier.sort_cols
+    fr_keys = new_seg.select(*state.frontier.join_cols)
     segments = materialize_many(
         [
             (lambda p=p: mat(
                 p.join(fr_keys, state.frontier.join_cols, "left_anti"),
-                n_parts=n, key=FRONTIER_KEY, repartition=False, sort=f_sort,
+                repartition=False,
             ))
             for p in state.frontier.segments
         ]
     )
     frontier = SegmentedTable(
-        tuple(segments), n_parts=n, key=state.frontier.key
+        tuple(segments), n_parts=state.frontier.n_parts, key=state.frontier.key
     )
-
-    return replace(
-        state, seen=seen, seen_sched=seen_sched, sketch=sketch,
-        frontier=frontier,
-    )
+    return replace(state, seen=seen, sketch=sketch, frontier=frontier)
 
 
 def forget_urls(
@@ -840,25 +714,23 @@ def forget_urls(
     config: CrawlConfig,
 ) -> CrawlState:
     """TTL expiry, coherent across EVERY seen representation the state
-    carries: the exact url_hash table, the scheduler-layout mirror
-    (``seen_tier="mirror"``, the default), and the sketch tier's cuckoo
-    sketch. After this, re-injecting the urls into the frontier (caller's
-    move — fresh priority/depth via ``seeds_to_frontier`` +
-    ``frontier.append``, see tests/test_cuckoo_delete.py) makes the same
-    crawl loop schedule them again. Deleting from only ONE representation
-    leaves the others stale: the mirror's anti-join would still suppress
-    the url (a silent no-op re-crawl), and a stale sketch entry keeps its
-    filter slot and sends the url through the exact anti-join as a maybe
-    every round — which is why this is one call.
+    carries: the exact seen table and the sketch tier's cuckoo sketch.
+    After this, re-injecting the urls into the frontier (caller's move —
+    fresh priority/depth via ``seeds_to_frontier`` + ``frontier.append``,
+    see tests/test_cuckoo_delete.py) makes the same crawl loop schedule
+    them again. Deleting from only ONE representation leaves the other
+    stale: the exact table's anti-join would still suppress the url (a
+    silent no-op re-crawl), and a stale sketch entry keeps its filter slot
+    and sends the url through the exact anti-join as a maybe every round —
+    which is why this is one call.
 
     ``keys_df``: url_hash, url_norm, host (the shape a schedule row
     carries). Only urls KNOWN to have entered the seen set may be passed
     (the cuckoo deletion precondition — sketch.CuckooFilter.delete). A
     bloom sketch cannot unset bits, so a sketch-tier state carrying one
     refuses loudly: sketch-tier TTL deployments configure
-    ``CrawlConfig(sketch_kind="cuckoo")`` (or ``use_bloom=False``). The
-    mirror tier keeps no sketch, so it expires urls under either
-    ``sketch_kind``.
+    ``CrawlConfig(sketch_kind="cuckoo")``. The mirror tier keeps no
+    sketch, so it expires urls under either ``sketch_kind``.
 
     Cost/scale: O(keys) exchange to route the key batch; every stored
     segment is rewritten through a co-partitioned LEFT-ANTI join — zero
@@ -872,63 +744,25 @@ def forget_urls(
         raise ValueError(
             "forget_urls: the state carries a bloom sketch, which cannot "
             "unset bits — configure CrawlConfig(sketch_kind='cuckoo') for "
-            "re-crawl-after-TTL deployments (or use_bloom=False, or the "
-            "default mirror tier, which keeps no sketch)"
+            "re-crawl-after-TTL deployments (or the default mirror tier, "
+            "which keeps no sketch)"
         )
     mat = _keyed_mat(config, state.workdir)
-    n = state.seen.n_parts
-
-    keys_hash = materialize_keyed(
-        keys_df.select("url_hash").distinct(), n_parts=n, key=state.seen.key
-    )
+    keys = _pinned_keys(_routed(keys_df, state.salts), state.seen.n_parts)
     seen = SegmentedTable(
         tuple(
-            mat(
-                seg.join(keys_hash, "url_hash", "left_anti"),
-                n_parts=n, key=state.seen.key, repartition=False,
-                sort=state.seen.sort_cols,
-            )
+            mat(seg.join(keys, list(_STATE_SORT), "left_anti"), repartition=False)
             for seg in state.seen.segments
         ),
-        n_parts=n, key=state.seen.key,
+        n_parts=state.seen.n_parts, key=state.seen.key,
     )
-
-    routed = None
-    if state.seen_sched is not None or state.sketch is not None:
-        routed = assign_salts_static(
-            keys_df.select("url_hash", "url_norm", "host").withColumn(
-                "host_bucket", host_bucket_col(F.col("host"))
-            ),
-            state.salts,
-        )
-
-    seen_sched = state.seen_sched
-    if seen_sched is not None:
-        routed_keys = materialize_keyed(
-            routed.select(*seen_sched.sort_cols),
-            n_parts=seen_sched.n_parts, key=FRONTIER_KEY,
-            sort=seen_sched.sort_cols,
-        )
-        seen_sched = SegmentedTable(
-            tuple(
-                mat(
-                    seg.join(routed_keys, list(seen_sched.sort_cols), "left_anti"),
-                    n_parts=seen_sched.n_parts, key=FRONTIER_KEY,
-                    repartition=False, sort=seen_sched.sort_cols,
-                )
-                for seg in seen_sched.segments
-            ),
-            n_parts=seen_sched.n_parts,
-            key=seen_sched.key,
-            id_col=seen_sched.id_col,
-        )
 
     sketch = state.sketch
     if sketch is not None:
         out = os.path.join(state.workdir, f"sketch_ttl_{uuid.uuid4().hex[:8]}")
-        sketch = sketch_delete(spark, sketch, routed, out)
+        sketch = sketch_delete(spark, sketch, keys, out)
 
-    return replace(state, seen=seen, seen_sched=seen_sched, sketch=sketch)
+    return replace(state, seen=seen, sketch=sketch)
 
 
 def commit_state(
@@ -945,11 +779,8 @@ def commit_state(
         "host_state": state.host_state,
         "schedule": schedule,
         "fetch_log": fetch_log,
+        "salt_table": state.salts,
     }
-    if state.salts is not None:
-        tables["salt_table"] = state.salts
-    if state.seen_sched is not None:
-        tables["seen_sched"] = state.seen_sched.df(spark, SEEN_SCHED)
     partition_by = {}
     if state.sketch is not None:
         tables["seen_sketch"] = sketch_df(spark, state.sketch)
@@ -965,90 +796,93 @@ def _resume_sketch(
     store: SnapshotStore,
     snapshot_id: int,
     tables: dict,
+    seen: SegmentedTable,
     config: CrawlConfig,
     workdir: str,
 ) -> SketchRef:
     """The sketch tier's URL-seen sketch for a resumed state: the committed
-    ``seen_sketch`` rows when the snapshot has them, else a rebuild from the
-    committed ``seen_sched`` mirror (a mirror-tier snapshot keeps no
-    sketch), so switching tiers never silently drops to the exact-only
-    branch."""
+    ``seen_sketch`` rows when the snapshot has them, else (a mirror-tier
+    snapshot keeps no sketch) a build from the resumed seen table, whose
+    segment is already bucketed by the sketch routing."""
     n = config.state_buckets
-    if "seen_sketch" in tables:
-        path = store.table_path(snapshot_id, "seen_sketch")
-        sk_df = spark.read.parquet(path)
-        # pre-schema snapshots (before routing/kind rode the rows) fall back
-        # to the only semantics they could have had — url_hash routing,
-        # bloom filters — mirroring the manifest-schema fallback in
-        # snapshots.py; selecting absent columns would fail the resume loudly
-        # for data that is perfectly resumable
-        have = set(sk_df.columns)
-        sel = ["n_bits", "n_hashes", "n_buckets"] + [
-            c for c in ("routing", "kind") if c in have
-        ]
-        first = sk_df.select(*sel).head(1)
-        if not first:
-            return _new_sketch(config)
-        stored_nb = int(first[0]["n_buckets"])
-        # bucket routing is pmod(hash(routing cols), n_buckets): resuming
-        # under a different bucket count would read the WRONG bits — silent
-        # false negatives. Fail loudly instead. The routing column list
-        # rides the rows for the same reason.
-        assert stored_nb == n, (
-            f"snapshot sketch has n_buckets={stored_nb} but "
-            f"config.state_buckets={n}; resume with the original value"
+    if "seen_sketch" not in tables:
+        sketch = _new_sketch(config)
+        if seen.segments[0].isEmpty():  # resume pins exactly one segment
+            return sketch  # never write a files-less delta directory
+        return write_sketch_delta(
+            seen.segments[0],
+            os.path.join(workdir, "sketch_base_resume"),
+            sketch,
+            assume_keyed_layout=True,
         )
-        return SketchRef(
-            (path,),
-            stored_nb,
-            int(first[0]["n_bits"]),
-            int(first[0]["n_hashes"]),
-            tuple(first[0]["routing"].split(","))
-            if "routing" in have
-            else ("url_hash",),
-            str(first[0]["kind"]) if "kind" in have else "bloom",
-        )
-    if "seen_sched" not in tables:
+    path = store.table_path(snapshot_id, "seen_sketch")
+    sk_df = spark.read.parquet(path)
+    # bucket = pmod(hash(routing cols), n_buckets): a sketch routed on other
+    # columns (snapshots from before the scheduler-layout routing carry no
+    # routing column and route on url_hash) or built for another bucket
+    # count would read the WRONG bits — silent false negatives
+    missing = [c for c in ("routing", "kind") if c not in sk_df.columns]
+    if missing:
         raise ValueError(
-            f"resume under seen_tier={config.seen_tier!r}: snapshot "
-            f"{snapshot_id} has neither a seen_sketch nor a seen_sched table "
-            "to build the URL-seen sketch from"
+            f"resume: snapshot {snapshot_id}'s seen_sketch has no "
+            f"{' or '.join(missing)} column, so it is not routed on "
+            f"{FRONTIER_KEY}; it cannot be resumed"
         )
-    # the mirror rows already carry the sketch routing (host_bucket, salt)
-    # plus url_hash: bucket them once and fold them in as the base delta
-    sketch = _new_sketch(config)
-    mirror = store.read(spark, snapshot_id, "seen_sched")
-    if mirror.isEmpty():  # never write a files-less delta directory
-        return sketch
-    return write_sketch_delta(
-        mirror.repartition(n, *FRONTIER_KEY),
-        os.path.join(workdir, "sketch_base_resume"),
-        sketch,
-        assume_keyed_layout=True,
+    first = sk_df.select(
+        "n_bits", "n_hashes", "n_buckets", "routing", "kind"
+    ).head(1)
+    if not first:
+        return _new_sketch(config)
+    row = first[0]
+    routing = tuple(row["routing"].split(","))
+    if routing != FRONTIER_KEY:
+        raise ValueError(
+            f"resume: snapshot {snapshot_id}'s seen_sketch is routed on "
+            f"{routing}, not on {FRONTIER_KEY}; it cannot be resumed"
+        )
+    if int(row["n_buckets"]) != n:
+        raise ValueError(
+            f"resume: snapshot {snapshot_id}'s seen_sketch has "
+            f"n_buckets={row['n_buckets']} but config.state_buckets={n}; "
+            "resume with the original value"
+        )
+    return SketchRef(
+        (path,), n, int(row["n_bits"]), int(row["n_hashes"]), routing,
+        str(row["kind"]),
     )
 
 
 def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> CrawlState:
-    """§3.3 exact resume: validate lineage, point the sketch at the stored
-    bucket-partitioned rows (NO rescan of seen, NO driver rebuild), continue
-    at batch N+1. The sketch tier resumes a sketch (see ``_resume_sketch``);
-    the mirror tier resumes one only from a snapshot that has no mirror to
-    come back (pre-mirror, or committed under the sketch tier), where the
-    committed sketch is the only seen filter left."""
+    """§3.3 exact resume: validate lineage, reload the state tables in their
+    layout, point the sketch tier's sketch at the stored bucket-partitioned
+    rows (NO driver rebuild; see ``_resume_sketch``), continue at batch
+    N+1. Either tier resumes a snapshot committed under the other: the exact
+    seen table is the same, and only the sketch tier keeps a sketch.
+
+    Raises ``ValueError`` when the store has no snapshot, when lineage
+    validation fails, and for snapshots this layout cannot read: a ``seen``
+    table without (host_bucket, salt), or a ``seen_sketch`` not routed on
+    them or built for another ``state_buckets``."""
     snapshot_id = store.head()
-    assert snapshot_id is not None, "nothing to resume from"
-    assert store.validate(snapshot_id, spark), "lineage validation failed"
+    if snapshot_id is None:
+        raise ValueError("resume: the store has no snapshot to resume from")
+    if not store.validate(snapshot_id, spark):
+        raise ValueError(f"resume: snapshot {snapshot_id} failed lineage validation")
     m = store.manifest(snapshot_id)
     n = config.state_buckets
+    seen_df = store.read(spark, snapshot_id, "seen")
+    missing = [c for c in FRONTIER_KEY if c not in seen_df.columns]
+    if missing:
+        raise ValueError(
+            f"resume: snapshot {snapshot_id}'s seen table has no "
+            f"{' or '.join(missing)} column: it was committed before the seen "
+            "set moved to the scheduler layout and cannot be resumed"
+        )
+    seen = SegmentedTable.from_df(seen_df, n_parts=n, key=FRONTIER_KEY)
     workdir = tempfile.mkdtemp(prefix="spiderspark-state-")
-    mirror_lost = (
-        config.use_bloom
-        and "seen_sketch" in m["tables"]
-        and "seen_sched" not in m["tables"]
-    )
     sketch = (
-        _resume_sketch(spark, store, snapshot_id, m["tables"], config, workdir)
-        if _wants_sketch(config) or mirror_lost
+        _resume_sketch(spark, store, snapshot_id, m["tables"], seen, config, workdir)
+        if config.seen_tier == "sketch"
         else None
     )
     host_state = _materialize(store.read(spark, snapshot_id, "host_state"))
@@ -1056,33 +890,14 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
     k_cap = int(
         max(config.policy.default_budget, (caps[0]["m"] or 0) if caps else 0)
     )
-    salts = (
-        _materialize(store.read(spark, snapshot_id, "salt_table"))
-        if "salt_table" in m["tables"]
-        else _materialize(
-            spark.createDataFrame([], "host string, n_salts int")
-        )
-    )
-    # the scheduler-layout mirror resumes from its committed table; a
-    # snapshot without one (pre-mirror, or committed under the sketch tier)
-    # leaves it None and select_round falls back to the resumed sketch's
-    # fused branch, or to the exact-only branch when there is no sketch
-    # (the mirror cannot be rebuilt from the seen table alone —
-    # (host_bucket, salt) needs the host, which SEEN drops)
-    seen_sched = None
-    if config.seen_tier == "mirror" and "seen_sched" in m["tables"]:
-        seen_sched = SegmentedTable.from_df(
-            store.read(spark, snapshot_id, "seen_sched"),
-            n_parts=n,
-            key=FRONTIER_KEY,
-        )
+    salts = _materialize(store.read(spark, snapshot_id, "salt_table"))
     return CrawlState(
         frontier=SegmentedTable.from_df(
             store.read(spark, snapshot_id, "frontier"),
             n_parts=n,
             key=FRONTIER_KEY,
         ),
-        seen=SegmentedTable.from_df(store.read(spark, snapshot_id, "seen"), n_parts=n),
+        seen=seen,
         host_state=host_state,
         sketch=sketch,
         batch_id=int(m["batch_id"]),
@@ -1090,7 +905,6 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
         k_cap=k_cap,
         salts=salts,
         snapshot_id=snapshot_id,
-        seen_sched=seen_sched,
     )
 
 

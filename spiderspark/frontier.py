@@ -7,9 +7,11 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
   each ArrowEvalPython node breaks WholeStageCodegen — batch the UDF work).
 - ``url_hash`` is Spark's built-in ``xxhash64`` (JVM-side, codegen'd), NOT a
   UDF — only the RFC-3986 string rewrite needs Python.
-- The exact-tier dedup is a left_anti join on url_hash; with the seen set
-  stored in the keyed layout (state.materialize_keyed) it plans as a
-  co-partitioned SMJ with zero exchange and zero sort on the big side.
+- The exact-tier dedup is a left_anti join on the url identity; with the
+  seen set stored in the probing side's keyed layout
+  (state.materialize_keyed — the crawl keeps both in the (host_bucket,
+  salt) scheduler layout) it plans as a co-partitioned SMJ with zero
+  exchange and zero sort on the big side.
 - The URL-seen sketch is FULLY DISTRIBUTED (SURVEY.md §2.4 A4/J2): the
   sketch lives as bucket-partitioned parquet (one Bloom per
   ``pmod(hash(url_hash), n_buckets)`` bucket, hive layout ``bucket=<b>/``);
@@ -149,6 +151,10 @@ def with_canonical(
     if jvm_fast is None:
         jvm_fast = os.environ.get("SPIDERSPARK_JVM_CANON", "1") != "0"
     url = F.col(url_col)
+    # an input that already carries derived columns (a re-canonicalised
+    # frontier row) gets them replaced, in the same place on both branches
+    derived = ("url_norm", "host", "url_hash", "host_bucket")
+    out_cols = [c for c in df.columns if c not in derived] + list(derived)
 
     def _kernel_branch(part: DataFrame) -> DataFrame:
         out = (
@@ -163,7 +169,7 @@ def with_canonical(
             (F.col("host") != "")
             & F.col("url_norm").startswith("http")
             & (F.length("url_norm") <= 2048)
-        )
+        ).select(*out_cols)
 
     if not jvm_fast:
         return _kernel_branch(df)
@@ -215,7 +221,7 @@ def with_canonical(
         )
         .withColumn("url_hash", F.xxhash64("url_norm"))
         .withColumn("host_bucket", host_bucket_col(F.col("host")))
-        .select(*df.columns, "url_norm", "host", "url_hash", "host_bucket")
+        .select(*out_cols)
     )
     # NULL url: rlike is NULL → the isNull disjunct routes it to the
     # kernel (which maps it to "" → filtered there), not to limbo
@@ -791,7 +797,6 @@ def membership_prefix_topk(
     ref: SketchRef,
     k_col: str = "host_budget",
     join_back: DataFrame | None = None,
-    join_strategy: str = "broadcast",
 ) -> DataFrame:
     """ONE partition-local pass that fuses J2 sketch membership with an
     EXACT per-host budget pre-selection — the operator that removes the
@@ -812,7 +817,7 @@ def membership_prefix_topk(
 
     Output: kept rows + ``_maybe`` (False ⇒ definitely unseen). With no
     sketch (ref.paths empty) every row is maybe-seen and nothing can be
-    pre-cut; callers should use the classic path then.
+    pre-cut; callers should filter through the exact table alone then.
 
     Scale shape: input partitions are complete (host, salt) groups, so kept
     rows per partition ≈ hosts_in_partition × budget × (1 + seen-share) per
@@ -821,38 +826,23 @@ def membership_prefix_topk(
 
     Cost shape: the pandas pass sees an ALL-NUMERIC thin projection (host as
     a JVM xxhash64 key — string/array columns never cross the Arrow
-    boundary; that conversion would dominate the stage) and emits only
-    (url_hash, _maybe) keys; the kept keys are broadcast-joined back onto
-    ``join_back`` (default ``df``), which preserves its partitioning.
-    Passing the CHECKPOINTED segment as ``join_back`` while ``df`` is the
-    gated/budgeted view of it saves a second full budget+robots pass over
-    the big side — the caller re-derives those columns on the tiny kept
-    set instead. Requires ``df`` deduped on url_hash (state segments are,
-    by invariant).
-
-    ``join_strategy`` picks how the kept keys rejoin the big side:
-
-    - ``"broadcast"`` (default, measured-fastest at sandbox scale): the
-      kept-key frame is broadcast and the big side never moves. Breaks when
-      budget × hosts ≫ 10^7 — the kept set is then a driver-sized object.
-    - ``"layout"`` (the 10^10-frontier configuration): the pandas pass also
-      emits the routing columns; the kept keys are hash-repartitioned on
-      ref.routing (O(kept) exchange) and the join runs on
-      (routing..., url_hash) — layout-satisfied on the big side (hash
-      exprs ⊆ join keys), so the big side moves ZERO bytes and, stored
-      sorted on (routing..., url_hash), sorts zero rows. Nothing is ever
-      driver-sized. Also one fewer driver round-trip: no broadcast-build
-      barrier job before the join job.
+    boundary; that conversion would dominate the stage) and emits only the
+    kept (routing..., url_hash, _maybe) keys. Those are hash-repartitioned
+    on ref.routing (O(kept) exchange) and joined back onto ``join_back``
+    (default ``df``) on (routing..., url_hash) — layout-satisfied on the big
+    side (hash exprs ⊆ join keys), so the big side moves ZERO bytes and,
+    stored sorted on (routing..., url_hash), sorts zero rows. Nothing is
+    ever driver-sized. Passing the CHECKPOINTED segment as ``join_back``
+    while ``df`` is the gated/budgeted view of it saves a second full
+    budget+robots pass over the big side — the caller re-derives those
+    columns on the tiny kept set instead. Requires ``df`` deduped on
+    url_hash (state segments are, by invariant).
     """
     paths, n_bits, n_hashes = ref.paths, ref.n_bits, ref.n_hashes
-    # layout mode: emit the routing columns that aren't url_hash itself
-    # (url_hash-routed sketches would otherwise emit a duplicate column);
-    # the join always includes url_hash, so join keys ⊇ routing either way
-    routing = (
-        [c for c in ref.routing if c != "url_hash"]
-        if join_strategy == "layout"
-        else []
-    )
+    # emit the routing columns that aren't url_hash itself (url_hash-routed
+    # sketches would otherwise emit a duplicate column); the join always
+    # includes url_hash, so join keys ⊇ routing either way
+    routing = [c for c in ref.routing if c != "url_hash"]
 
     def fn(batches):
         fns: dict[int, object] = {}
@@ -901,14 +891,13 @@ def membership_prefix_topk(
     out_schema = ", ".join(
         [f"{c} int" for c in routing] + ["url_hash long", "_maybe boolean"]
     )
-    kept_keys = thin.mapInPandas(fn, schema=out_schema)
+    # repartition on the big side's exact layout columns (ref.routing); the
+    # kept frame carries them all (extras + url_hash)
+    kept_keys = thin.mapInPandas(fn, schema=out_schema).repartition(
+        ref.n_buckets, *ref.routing
+    )
     big = join_back if join_back is not None else df
-    if join_strategy == "layout":
-        # repartition on the big side's exact layout columns (ref.routing);
-        # the kept frame carries them all (extras + url_hash)
-        kept_keys = kept_keys.repartition(ref.n_buckets, *ref.routing)
-        return big.join(kept_keys, routing + ["url_hash"])
-    return big.join(F.broadcast(kept_keys), "url_hash")
+    return big.join(kept_keys, routing + ["url_hash"])
 
 
 # ---------------------------------------------------------------------------

@@ -43,23 +43,16 @@ FRONTIER = T.StructType(
     ]
 )
 
-# Exact tier of the URL-seen set.
+# Exact tier of the URL-seen set, in the frontier's SCHEDULER layout:
+# partitioned on (host_bucket, salt) and sorted on (..., url_hash), so every
+# seen filter — the schedule's anti-join, the sketch tier's maybe-sliver
+# probe, the delta's anti-probe — is a co-partitioned zero-exchange join.
 SEEN = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("first_batch", T.LongType(), False),
-    ]
-)
-
-# Exact tier, SCHEDULER-LAYOUT mirror: the seen keys re-keyed by the
-# frontier's (host_bucket, salt) partitioning so per-round seen filtering is
-# a co-partitioned zero-exchange anti-join (round-5 measured default; the
-# bloom sketch remains the low-read-volume tier for seen ≫ memory).
-SEEN_SCHED = T.StructType(
     [
         T.StructField("host_bucket", T.IntegerType(), False),
         T.StructField("salt", T.IntegerType(), False),
         T.StructField("url_hash", T.LongType(), False),
+        T.StructField("first_batch", T.LongType(), False),
     ]
 )
 

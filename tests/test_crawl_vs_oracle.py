@@ -21,9 +21,7 @@ ROUNDS = 3
 BUDGET = 5.0
 
 
-def _spark_run(
-    spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom", seen_tier="mirror"
-):
+def _spark_run(spark, rounds=ROUNDS, sketch_kind="bloom", seen_tier="mirror"):
     pages = spark.createDataFrame(
         gen_pages_pdf(np.arange(CORPUS), CORPUS),
         schema="url string, warc_ts timestamp, html binary, text string, lang string",
@@ -32,7 +30,6 @@ def _spark_run(
     robots = spark.createDataFrame(robots_pdf(), schema=ROBOTS_TXT)
     config = CrawlConfig(
         policy=HostPolicy(default_budget=BUDGET, round_seconds=60.0),
-        use_bloom=use_bloom,
         state_buckets=4,
         bloom_capacity_per_bucket=4096,
         sketch_kind=sketch_kind,
@@ -74,6 +71,7 @@ def oracle_result():
 def test_ordering_and_seen_match_oracle(spark, oracle_result):
     oracle_rounds, oracle = oracle_result
     spark_rounds, spark_seen, state, _, _ = _spark_run(spark)
+    assert state.sketch is None  # the default mirror tier: exact table only
     assert spark_rounds == oracle_rounds, "crawl ordering diverged"
     assert spark_seen == sorted(oracle.seen), "final URL-seen set diverged"
     # sanity: the crawl actually did something non-trivial
@@ -95,20 +93,14 @@ def test_cuckoo_tier_changes_nothing(spark, oracle_result):
 
 
 def test_bloom_tier_changes_nothing(spark, oracle_result):
-    """Bloom is an accelerator, not a semantic: under the sketch tier, with
-    and without it the schedule is identical (zero false negatives + exact
-    residual)."""
+    """Bloom is an accelerator, not a semantic: the sketch tier's schedule
+    equals the oracle's, as the exact-only default mirror run's does (zero
+    false negatives + exact residual)."""
     oracle_rounds, oracle = oracle_result
     bloom_rounds, bloom_seen, state, _, _ = _spark_run(spark, seen_tier="sketch")
     assert state.sketch.kind == "bloom" and len(state.sketch.paths) > 0
     assert bloom_rounds == oracle_rounds
     assert bloom_seen == sorted(oracle.seen)
-    no_bloom_rounds, no_bloom_seen, state, _, _ = _spark_run(
-        spark, use_bloom=False, seen_tier="sketch"
-    )
-    assert state.sketch is None and state.seen_sched is None  # exact-only
-    assert no_bloom_rounds == oracle_rounds
-    assert no_bloom_seen == sorted(oracle.seen)
 
 
 def test_text_byte_identity(spark, oracle_result):

@@ -87,6 +87,7 @@ def test_cuckoo_delete_then_recrawl(spark):
             F.col("url_hash") != target["url_hash"]
         ),
         n_parts=N,
+        key=FRONTIER_KEY,
     )
     reinjected = materialize_keyed(
         assign_salts_static(
@@ -124,11 +125,10 @@ def test_cuckoo_delete_then_recrawl(spark):
 
 def test_forget_urls_mirror_tier_end_to_end(spark):
     """TTL expiry under the DEFAULT seen tier: ``seen_tier='mirror'``
-    maintains the scheduler-layout seen mirror alongside the exact table
-    (and no sketch), and a delete that touched only the exact table would
-    be a silent no-op (the mirror's anti-join still suppresses the url
-    forever). forget_urls must expire the url from EVERY representation so
-    the very same mirror loop re-schedules it."""
+    filters through the exact scheduler-layout seen table alone (no
+    sketch), so a url forget_urls missed would stay suppressed forever by
+    that table's anti-join. forget_urls must expire it so the very same
+    mirror loop re-schedules it."""
     from spiderspark.crawl import forget_urls
 
     config = CrawlConfig(
@@ -145,7 +145,7 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
     fetched = {r["url_hash"] for r in log1.filter("status = 'fetched'").collect()}
     target = s1.filter(F.col("url_hash").isin(list(fetched))).orderBy("rank").first()
     assert target is not None
-    assert state.seen_sched is not None  # the mirror is live
+    assert state.sketch is None  # the exact table is the only seen filter
 
     state2, s2, _ = crawl_round(spark, state, pk, config)
     assert target["url_hash"] not in _hashes(s2)  # suppressed while seen
@@ -155,13 +155,9 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
         "url_hash long, url_norm string, host string",
     )
     state3 = forget_urls(spark, state2, key_df, config)
-    # gone from every representation
+    # gone from the seen table, and nothing else went with it
     assert target["url_hash"] not in _hashes(state3.seen.df(spark, SEEN))
-    assert target["url_hash"] not in _hashes(
-        state3.seen_sched.segments[0].unionByName(
-            *state3.seen_sched.segments[1:]
-        ) if len(state3.seen_sched.segments) > 1 else state3.seen_sched.segments[0]
-    )
+    assert state3.seen.total_rows() == state2.seen.total_rows() - 1
 
     reinjected = materialize_keyed(
         assign_salts_static(

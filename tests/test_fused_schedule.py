@@ -218,11 +218,13 @@ def test_membership_prefix_topk_superset_and_no_false_negatives(spark, setup):
     assert kept.count() < keyed.count()
 
 
-def test_membership_prefix_topk_layout_join_matches_broadcast(spark, setup):
-    """join_strategy='layout' (the 10^10 configuration: no driver-sized
-    kept-key object) must select the exact same rows as the broadcast
-    strategy, and its join must move ZERO bytes of the big side: the only
-    hash exchange in the whole plan is the O(kept) key repartition."""
+def test_membership_prefix_topk_layout_join_one_exchange(spark, setup):
+    """The kept keys rejoin the big side in its own layout (the 10^10
+    configuration: no driver-sized kept-key object). Joining back onto the
+    checkpointed segment must select the exact same rows as joining back
+    onto the gated view itself, and the join must move ZERO bytes of the
+    big side: the only hash exchange in the whole plan is the O(kept) key
+    repartition."""
     from spiderspark.frontier import dedup_within_batch
     from spiderspark.politeness import join_host_state
     from spiderspark.schemas import HOST_STATE
@@ -245,13 +247,9 @@ def test_membership_prefix_topk_layout_join_matches_broadcast(spark, setup):
         keyed, spark.createDataFrame([], HOST_STATE), setup["policy"]
     ).filter(F.col("host_budget") > 0)
 
-    bcast = membership_prefix_topk(
-        budgeted, setup["sk_fused"], join_back=keyed, join_strategy="broadcast"
-    )
-    layout = membership_prefix_topk(
-        budgeted, setup["sk_fused"], join_back=keyed, join_strategy="layout"
-    )
-    a = {(r["url_hash"], r["_maybe"]) for r in bcast.select("url_hash", "_maybe").collect()}
+    on_view = membership_prefix_topk(budgeted, setup["sk_fused"])
+    layout = membership_prefix_topk(budgeted, setup["sk_fused"], join_back=keyed)
+    a = {(r["url_hash"], r["_maybe"]) for r in on_view.select("url_hash", "_maybe").collect()}
     b = {(r["url_hash"], r["_maybe"]) for r in layout.select("url_hash", "_maybe").collect()}
     assert a == b and len(a) > 0
 

@@ -180,3 +180,22 @@ def test_env_kill_switch(spark, monkeypatch):
     monkeypatch.delenv("SPIDERSPARK_JVM_CANON")
     plan_on = with_canonical(df)._jdf.queryExecution().executedPlan().toString()
     assert "Union" in plan_on
+
+
+def test_stale_derived_columns_replaced_on_both_branches(spark):
+    """An input that already carries host and url_hash (e.g. a frontier row
+    canonicalised again) gets them replaced, not duplicated: the default
+    JVM-gate branch and the kernel-only branch return the same columns and
+    the same rows, with none of the stale values left."""
+    df = spark.createDataFrame(
+        [(u, "stale.example", 7) for u in ADVERSARIAL],
+        "url string, host string, url_hash long",
+    )
+    split = with_canonical(df)
+    kernel = with_canonical(df, jvm_fast=False)
+    cols = ["url", "url_norm", "host", "url_hash", "host_bucket"]
+    assert split.columns == kernel.columns == cols
+    got = sorted(tuple(r) for r in split.collect())
+    assert got == sorted(tuple(r) for r in kernel.collect())
+    assert len(got) > 0
+    assert all(r[2] != "stale.example" and r[3] != 7 for r in got)

@@ -1,5 +1,5 @@
 """mark_seen: pre-seeding the URL-seen set coherently across every
-representation (exact table, scheduler-layout mirror, sketch) plus frontier
+representation (the exact scheduler-layout table, the sketch) plus frontier
 pruning — the additive dual of forget_urls. A pre-seeded url must never be
 scheduled by the same fused loop that schedules it in a control run, a
 mark_seen → forget_urls round-trip must restore schedulability, and a
@@ -9,6 +9,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from spiderspark.crawl import (
+    FRONTIER_KEY,
     CrawlConfig,
     crawl_round,
     forget_urls,
@@ -100,8 +101,7 @@ def test_mark_seen_idempotent_and_batch_preserved(spark):
     s2 = mark_seen(spark, s1, keys, config)
     assert s2.seen.total_rows() == 3
     assert s2 is s1  # empty delta short-circuits
-    if s1.seen_sched is not None:
-        assert s1.seen_sched.total_rows() == 3
+    assert s1.seen.key == FRONTIER_KEY  # one table, in the frontier layout
 
 
 def _n_maybe_seen(rows, sketch):

@@ -260,9 +260,8 @@ def test_empty_delta_dir_readable_and_harmless(spark):
 def test_crawl_round_with_nothing_newly_seen_commits(spark):
     """ADVICE r02 (high), end-to-end: a store-backed round in which NO url
     becomes seen (no page fetched, attempts left) must not crash commit —
-    the sketch-delta write (sketch tier) and the mirror-segment write
-    (default mirror tier) are both skipped for the empty newly-seen
-    segment."""
+    the sketch-delta write (sketch tier) and the seen-segment append (both
+    tiers) are skipped for the empty newly-seen segment."""
     from spiderspark.crawl import CrawlConfig, crawl_round, init_state, keyed_pages
     from spiderspark.politeness import HostPolicy
     from spiderspark.snapshots import ParquetManifestStore
@@ -292,7 +291,8 @@ def test_crawl_round_with_nothing_newly_seen_commits(spark):
             assert len(state.sketch.paths) == 0  # ...and no delta dir written
         else:
             assert state.sketch is None
-            assert state.seen_sched.total_rows() == 0
+        # ...and no empty segment appended to the seen table
+        assert state.seen.segments == ()
 
 
 def test_durable_segment_keeps_layout_contract(spark):
